@@ -1008,17 +1008,35 @@ object ExtensionQueries {
     // restart. Fixture-scale pin: the text fits executor memory by
     // construction here; never pin a text-bearing frame in operator
     // code (the toks/no-text doctrine).
-    val pinned = fixtureMemo.compute(s"$dir|$withCrossSourcePlants",
-      (_, old) => {
-        if (old != null && !old.sparkSession.sparkContext.isStopped) old
-        else graft.operators.Ops.checkpointKeepPartitioning(corpus,
-          eager = true)
-      })
+    val pinned = memoized(fixtureMemo, s"$dir|$withCrossSourcePlants", s)(
+      graft.operators.Ops.checkpointKeepPartitioning(corpus, eager = true))
     (pinned, evals, sourceTokenBudgets.toDF("source", "budget"))
   }
 
+  /** A memo entry whose value is built lazily, OUTSIDE the map: the
+    * `compute` in [[memoized]] only installs the holder, so a multi-second
+    * eager build never runs under the ConcurrentHashMap bin lock (which
+    * would stall every other key hashing to that bin). Callers of the
+    * SAME key wait on the holder's own lazy-val lock and share one build.
+    * `sc` is the context the value's blocks live on. */
+  private final class Memo[A](val sc: org.apache.spark.SparkContext,
+      build: => A) {
+    lazy val value: A = build
+  }
+
+  /** Memo lookup with the stale-context validation: the pinned values
+    * hold localCheckpoint blocks bound to the creating SparkContext, and
+    * a same-JVM session restart (the memos are JVM-global) would
+    * otherwise serve frames over a dead context, failing far from the
+    * cause — a stale entry is replaced by a fresh holder. */
+  private def memoized[A](memo: java.util.concurrent.ConcurrentHashMap[
+      String, Memo[A]], key: String, s: SparkSession)(build: => A): A =
+    memo.compute(key, (_, old) =>
+      if (old != null && !old.sc.isStopped) old
+      else new Memo(s.sparkContext, build)).value
+
   private val fixtureMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, Memo[DataFrame]]()
 
   /** The plain capstone build, MEMOIZED per (JVM, sfDir) with its
     * outputs pinned: seven registered queries derive different reports
@@ -1028,35 +1046,25 @@ object ExtensionQueries {
     * full gate chain per consumer (and per bench rep) timed the same
     * build ~10×; now the first consumer pays it and every later one
     * reads the pinned boundary (the tableExists build-once convention,
-    * at the composition level). Thread-safe (computeIfAbsent) for the
+    * at the composition level). Thread-safe ([[memoized]]) for the
     * parallel Verify: the pinned frames are executor-global
     * localCheckpoint blocks, valid from any worker session of the
     * shared context. Variant builds (doremi/ablation/d4/… corpora)
     * stay un-memoized — each has exactly one consumer and its number
     * deliberately times the full lifecycle. */
   private val cbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.operators.CorpusBuild.Result]()
+    String, Memo[graft.operators.CorpusBuild.Result]]()
 
   private[graft] def corpusBuildResult(s: SparkSession, dir: String)
-      : graft.operators.CorpusBuild.Result = {
-    // compute(), not computeIfAbsent(): a memo hit must be VALIDATED —
-    // the pinned frames hold localCheckpoint blocks bound to the
-    // creating SparkContext, and a same-JVM session restart (the memo
-    // is JVM-global) would otherwise serve frames over a dead context,
-    // failing far from the cause. A stale entry rebuilds in place.
-    cbMemo.compute(dir, (_, old) => {
-      if (old != null &&
-          !old.survivors.sparkSession.sparkContext.isStopped) old
-      else {
-        val (corpus, evals, budgets) = corpusBuildFixture(s, dir)
-        val r = graft.operators.CorpusBuild.build(corpus, evals, budgets)
-        graft.operators.CorpusBuild.Result(
-          r.attribution.localCheckpoint(),
-          r.manifest.localCheckpoint(),
-          r.survivors) // already checkpointKeepPartitioning-pinned
-      }
-    })
-  }
+      : graft.operators.CorpusBuild.Result =
+    memoized(cbMemo, dir, s) {
+      val (corpus, evals, budgets) = corpusBuildFixture(s, dir)
+      val r = graft.operators.CorpusBuild.build(corpus, evals, budgets)
+      graft.operators.CorpusBuild.Result(
+        r.attribution.localCheckpoint(),
+        r.manifest.localCheckpoint(),
+        r.survivors) // already checkpointKeepPartitioning-pinned
+    }
 
   /** The D4 fixture's embedding store + frozen quantizer (mirrors
     * [[d4StageCtes]] class for class): vec_id+300000 keys each vector

@@ -595,7 +595,7 @@ object SketchQueries {
         IndexStore.unlearnFromCmsIndex(
           items.where(col("source") === "src0"),
           "source", "item", tbl, batchKey = -1L)
-        IndexStore.compactCmsIndex(s, tbl, s"/tmp/graft_index/${tbl}_c")
+        IndexStore.compact(s, "cms", tbl, s"/tmp/graft_index/${tbl}_c")
         IndexStore.cmsRegistersFromIndex(s, tbl)
           .orderBy("grp", "row_j", "idx")
       }),
@@ -787,8 +787,7 @@ object SketchQueries {
         IndexStore.unlearnFromQhistIndex(
           m.where(col("source") === "src0"), "source", "v", tbl,
           batchKey = -1L)
-        IndexStore.compactQhistIndex(s, tbl,
-          s"/tmp/graft_index/${tbl}_c")
+        IndexStore.compact(s, "qh", tbl, s"/tmp/graft_index/${tbl}_c")
         IndexStore.qhistCutoffsFromIndex(s, tbl, Seq(500))
           .select("grp", "cutoff").orderBy("grp")
       }),

@@ -384,8 +384,14 @@ object Centrality {
     val spark = nodes.sparkSession
     val nodeRows = nodes.select(col(idCol)).distinct()
       .limit(maxNodes + 1).collect()
+    // endpoints cast to the node-id type: the driver loop matches ids as
+    // map keys, where e.g. a decimal or string endpoint never equals a
+    // long node id (the distributed joins coerce; this lookup would not)
+    val idField = nodes.select(col(idCol)).schema.head.copy(name = idCol)
     lazy val edgeRows = edges
-      .select(col(srcCol), col(dstCol), col(wCol).cast("long"))
+      .select(col(srcCol).cast(idField.dataType),
+        col(dstCol).cast(idField.dataType),
+        col(wCol).cast("long"))
       .limit(maxEdges + 1).collect()
     if (nodeRows.length > maxNodes || edgeRows.length > maxEdges)
       return pageRank(nodes, edges, iters, dampingPct, idCol,
@@ -428,7 +434,6 @@ object Centrality {
             (contrib.getOrElse(id, 0L) + dmass / nNodes)) / 100L
       }.toMap
     }
-    val idField = nodes.select(col(idCol)).schema.head.copy(name = idCol)
     val schema = org.apache.spark.sql.types.StructType(Seq(idField,
       org.apache.spark.sql.types.StructField("rank_fp",
         org.apache.spark.sql.types.LongType, nullable = false)))

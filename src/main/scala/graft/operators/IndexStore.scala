@@ -59,6 +59,32 @@ object IndexStore {
       nBuckets: Int): DataFrame =
     df.repartition(nBuckets, col(bucketCol))
 
+  /** The build-time write every kind shares: `df` routed to its bucket
+    * and written as the bucketed external table `table` at
+    * `$path/$table` (overwrite — a build is an idempotent replace), then
+    * the build parameters attached right after the table materializes
+    * (the CTAS→ALTER pair is not atomic, but the crash window is one
+    * statement; rebuild any index whose creation crashed rather than
+    * appending to it). */
+  private def writeBucketed(df: DataFrame, table: String, path: String,
+      bucketCol: String, nBuckets: Int, params: Map[String, String]): Unit = {
+    bucketRouted(df, bucketCol, nBuckets).write.bucketBy(nBuckets, bucketCol)
+      .option("path", s"$path/$table").mode("overwrite").saveAsTable(table)
+    setParams(df.sparkSession, table, params)
+  }
+
+  /** The append-time write every kind shares. The bucket spec comes
+    * from the catalog — an append can never silently (or loudly, via
+    * Spark's raw bucketing-mismatch error) re-bucket — and the append is
+    * counted on the auto-compaction clock ([[noteAppend]]). */
+  private def appendBucketed(df: DataFrame, table: String): Unit = {
+    val spark = df.sparkSession
+    val (bucketCol, nb) = bucketSpecOf(spark, table)
+    bucketRouted(df, bucketCol, nb).write.bucketBy(nb, bucketCol)
+      .mode("append").saveAsTable(table)
+    noteAppend(spark, table)
+  }
+
   private val ParamPrefix = "graft.param."
 
   private def tableMeta(spark: SparkSession, table: String) =
@@ -122,31 +148,16 @@ object IndexStore {
   def buildMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
       table: String, path: String, shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
     val params = minhashParams(shingleN, numHashes, bands) + ("idCol" -> idCol)
     val shingled = shingleOf(Ops.spreadForHash(docs), idCol, textCol, shingleN)
     withPersisted(shingled) {
-      // params land immediately after each table materializes: the
-      // CTAS→ALTER pair is still not atomic, but the crash window is one
-      // statement, and a build is an idempotent overwrite — rebuild any
-      // index whose creation crashed rather than appending to it.
-      // The two tables are independent consumers of the one persisted
+      // the two tables are independent consumers of the one persisted
       // staging frame, so their CTAS statements overlap (Ops.concurrently)
       Ops.concurrently(
-        () => {
-          bucketRouted(bandsOf(shingled, idCol, numHashes, bands),
-              "band_key", nBuckets)
-            .write.bucketBy(nBuckets, "band_key")
-            .option("path", s"$path/${table}_bands").mode("overwrite")
-            .saveAsTable(s"${table}_bands")
-          setParams(spark, s"${table}_bands", params)
-        },
-        () => {
-          bucketRouted(shingled, idCol, nBuckets).write.bucketBy(nBuckets, idCol)
-            .option("path", s"$path/${table}_shingles").mode("overwrite")
-            .saveAsTable(s"${table}_shingles")
-          setParams(spark, s"${table}_shingles", params)
-        })
+        () => writeBucketed(bandsOf(shingled, idCol, numHashes, bands),
+          s"${table}_bands", path, "band_key", nBuckets, params),
+        () => writeBucketed(shingled, s"${table}_shingles", path, idCol,
+          nBuckets, params))
     }
   }
 
@@ -178,20 +189,11 @@ object IndexStore {
       minhashParams(shingleN, numHashes, bands) + ("idCol" -> idCol), "append")
     val shingled = shingleOf(Ops.spreadForHash(delta), idCol, textCol, shingleN)
     withPersisted(shingled) { // feeds both writes, overlapped
-      // bucket counts come from the catalog — an append can never silently
-      // (or loudly, via Spark's raw bucketing-mismatch error) re-bucket
-      val nbB = numBucketsOf(spark, s"${table}_bands")
-      val nbS = numBucketsOf(spark, s"${table}_shingles")
       Ops.concurrently(
-        () => bucketRouted(bandsOf(shingled, idCol, numHashes, bands),
-            "band_key", nbB)
-          .write.bucketBy(nbB, "band_key")
-          .mode("append").saveAsTable(s"${table}_bands"),
-        () => bucketRouted(shingled, idCol, nbS).write.bucketBy(nbS, idCol)
-          .mode("append").saveAsTable(s"${table}_shingles"))
+        () => appendBucketed(bandsOf(shingled, idCol, numHashes, bands),
+          s"${table}_bands"),
+        () => appendBucketed(shingled, s"${table}_shingles"))
     }
-    Seq(s"${table}_bands", s"${table}_shingles")
-      .foreach(noteAppend(spark, _))
   }
 
   /** Hot-bucket guard for persisted probes, mirroring
@@ -473,7 +475,8 @@ object IndexStore {
       probe: DataFrame => DataFrame,
       innerPairs: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val b = pinBatch(batch)
-    val matches = probe(b).localCheckpoint()
+    val probed = probe(b)
+    val matches = probed.localCheckpoint()
     val vsIndex = b.join(
       matches.select(col("query_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
@@ -481,6 +484,11 @@ object IndexStore {
       .select(col("id_b").as(idCol)).distinct()
     val accepted = vsIndex.join(innerDups, Seq(idCol), "left_anti")
       .localCheckpoint()
+    // the probe's and the pairs kernel's own boundaries are consumed
+    // now that both results are materialized — as is `b` when this
+    // stage pinned it; the caller's input and the returned matches stay
+    Ops.freeLogicalRddBlocks(probed, batch)
+    Ops.freeLogicalRddBlocks(innerDups, batch, matches)
     (accepted, matches)
   }
 
@@ -511,26 +519,17 @@ object IndexStore {
     * chunk_key — pigeonhole over 4×16-bit chunks, so any pair within
     * Hamming ≤ 3 of a probe collides on at least one chunk. */
   def buildSimhashIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, path: String, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(simhashChunks(docs, idCol, textCol), "chunk_key", nBuckets)
-      .write.bucketBy(nBuckets, "chunk_key")
-      .option("path", s"$path/${table}_chunks").mode("overwrite")
-      .saveAsTable(s"${table}_chunks")
-    setParams(spark, s"${table}_chunks", Map("idCol" -> idCol))
-  }
+      table: String, path: String, nBuckets: Int = 8): Unit =
+    writeBucketed(simhashChunks(docs, idCol, textCol), s"${table}_chunks",
+      path, "chunk_key", nBuckets, Map("idCol" -> idCol))
 
   /** Appends delta docs' chunk rows in place, mirroring
     * [[appendMinhashIndex]]. */
   def appendSimhashIndex(delta: DataFrame, idCol: String, textCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_chunks", Map("idCol" -> idCol), "append")
-    val nb = numBucketsOf(spark, s"${table}_chunks")
-    bucketRouted(simhashChunks(delta, idCol, textCol), "chunk_key", nb)
-      .write.bucketBy(nb, "chunk_key")
-      .mode("append").saveAsTable(s"${table}_chunks")
-    noteAppend(spark, s"${table}_chunks")
+    requireParams(delta.sparkSession, s"${table}_chunks",
+      Map("idCol" -> idCol), "append")
+    appendBucketed(simhashChunks(delta, idCol, textCol), s"${table}_chunks")
   }
 
   /** Near-dup matches for each query doc at exact Hamming ≤ maxHamming.
@@ -558,27 +557,6 @@ object IndexStore {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Deletes documents from a SimHash index. */
-  def deleteFromSimhashIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String): Unit = {
-    val chunks = s"${table}_chunks"
-    val idCol = getParams(spark, chunks).getOrElse("idCol", "doc_id")
-    deleteFromTable(spark, chunks, bucketColOf(spark, chunks), idCol, ids,
-      s"$newPathBase/${chunks}_d", numBucketsOf(spark, chunks))
-  }
-
-  /** Compacts the SimHash chunk table. */
-  def compactSimhashIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val chunks = s"${table}_chunks"
-    compactTable(spark, chunks, bucketColOf(spark, chunks),
-      s"$newPathBase/${chunks}_c", numBucketsOf(spark, chunks))
-  }
-
-  /** Vacuums the SimHash index's retired directories. */
-  def vacuumSimhashIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_chunks")
-
   // ---- Winnow (exact-substring fingerprint) index --------------------
   // The fifth index kind: the winnowed window-fingerprint table behind
   // repeated-span and boilerplate detection ([[Dedup.repeatedWindowSpans]]
@@ -602,15 +580,10 @@ object IndexStore {
     * parameters are persisted and validated like every other kind. */
   def buildWinnowIndex(docs: DataFrame, idCol: String, textCol: String,
       table: String, path: String, window: Int = 20, guarantee: Int = 10,
-      nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(Dedup.winnowedFingerprints(Ops.spreadForHash(docs), idCol,
-        textCol, window, guarantee), "fp", nBuckets)
-      .write.bucketBy(nBuckets, "fp")
-      .option("path", s"$path/${table}_wins").mode("overwrite")
-      .saveAsTable(s"${table}_wins")
-    setParams(spark, s"${table}_wins", winnowParams(window, guarantee, idCol))
-  }
+      nBuckets: Int = 8): Unit =
+    writeBucketed(Dedup.winnowedFingerprints(Ops.spreadForHash(docs), idCol,
+        textCol, window, guarantee), s"${table}_wins", path, "fp", nBuckets,
+      winnowParams(window, guarantee, idCol))
 
   /** Appends `delta` docs' fingerprint rows in place, mirroring
     * [[appendMinhashIndex]]: stable bucket routing keeps a fingerprint's
@@ -618,15 +591,10 @@ object IndexStore {
     * and new documents. */
   def appendWinnowIndex(delta: DataFrame, idCol: String, textCol: String,
       table: String, window: Int = 20, guarantee: Int = 10): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_wins",
+    requireParams(delta.sparkSession, s"${table}_wins",
       winnowParams(window, guarantee, idCol), "append")
-    val nb = numBucketsOf(spark, s"${table}_wins")
-    bucketRouted(Dedup.winnowedFingerprints(Ops.spreadForHash(delta), idCol,
-        textCol, window, guarantee), "fp", nb)
-      .write.bucketBy(nb, "fp")
-      .mode("append").saveAsTable(s"${table}_wins")
-    noteAppend(spark, s"${table}_wins")
+    appendBucketed(Dedup.winnowedFingerprints(Ops.spreadForHash(delta), idCol,
+      textCol, window, guarantee), s"${table}_wins")
   }
 
   /** [[Dedup.repeatedWindowSpans]] served from the persisted table: the
@@ -705,27 +673,6 @@ object IndexStore {
     r
   }
 
-  /** Compacts the winnow fingerprint table. */
-  def compactWinnowIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val wins = s"${table}_wins"
-    compactTable(spark, wins, bucketColOf(spark, wins),
-      s"$newPathBase/${wins}_c", numBucketsOf(spark, wins))
-  }
-
-  /** Deletes documents from a winnow index — the take-down path. */
-  def deleteFromWinnowIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String): Unit = {
-    val wins = s"${table}_wins"
-    deleteFromTable(spark, wins, bucketColOf(spark, wins),
-      winnowIdCol(spark, table), ids, s"$newPathBase/${wins}_d",
-      numBucketsOf(spark, wins))
-  }
-
-  /** Vacuums the winnow index's retired directories. */
-  def vacuumWinnowIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_wins")
-
   // ---- exact-fingerprint index --------------------------------------
   // The sixth (and cheapest) index kind: one md5 per document, no
   // signatures, no windows. Exists so the composed ingest gate can cut
@@ -753,28 +700,17 @@ object IndexStore {
     * probe join moves only the probe side — the same zero-index-shuffle
     * contract as every other kind. */
   def buildExactIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, path: String, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(exactFps(docs, idCol, textCol), "fp", nBuckets)
-      .write.bucketBy(nBuckets, "fp")
-      .option("path", s"$path/${table}_fps").mode("overwrite")
-      .saveAsTable(s"${table}_fps")
-    setParams(spark, s"${table}_fps",
-      Map("idCol" -> idCol, "payload" -> "text"))
-  }
+      table: String, path: String, nBuckets: Int = 8): Unit =
+    writeBucketed(exactFps(docs, idCol, textCol), s"${table}_fps", path,
+      "fp", nBuckets, Map("idCol" -> idCol, "payload" -> "text"))
 
   /** Appends delta docs' fingerprint rows in place, mirroring
     * [[appendMinhashIndex]]. */
   def appendExactIndex(delta: DataFrame, idCol: String, textCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_fps",
+    requireParams(delta.sparkSession, s"${table}_fps",
       Map("idCol" -> idCol, "payload" -> "text"), "append")
-    val nb = numBucketsOf(spark, s"${table}_fps")
-    bucketRouted(exactFps(delta, idCol, textCol), "fp", nb)
-      .write.bucketBy(nb, "fp")
-      .mode("append").saveAsTable(s"${table}_fps")
-    noteAppend(spark, s"${table}_fps")
+    appendBucketed(exactFps(delta, idCol, textCol), s"${table}_fps")
   }
 
   /** Exact-duplicate probe: the indexed docs sharing each query doc's
@@ -827,27 +763,6 @@ object IndexStore {
     autoCompact(spark, "exact", table, autoCompactAppends)
     r
   }
-
-  /** Compacts the exact-fingerprint table. */
-  def compactExactIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val fps = s"${table}_fps"
-    compactTable(spark, fps, bucketColOf(spark, fps),
-      s"$newPathBase/${fps}_c", numBucketsOf(spark, fps))
-  }
-
-  /** Deletes documents from an exact index — the take-down path. */
-  def deleteFromExactIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String): Unit = {
-    val fps = s"${table}_fps"
-    deleteFromTable(spark, fps, bucketColOf(spark, fps),
-      getParams(spark, fps).getOrElse("idCol", "doc_id"), ids,
-      s"$newPathBase/${fps}_d", numBucketsOf(spark, fps))
-  }
-
-  /** Vacuums the exact index's retired directories. */
-  def vacuumExactIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_fps")
 
   // ---- Bloom sidecar over the exact kind ---------------------------
   //
@@ -1010,27 +925,16 @@ object IndexStore {
     * contract; the payload param makes text/vec cross-probes fail loud
     * at the parameter check instead of silently never matching. */
   def buildExactVecIndex(vecs: DataFrame, idCol: String, vecCol: String,
-      table: String, path: String, nBuckets: Int = 8): Unit = {
-    val spark = vecs.sparkSession
-    bucketRouted(vecFps(vecs, idCol, vecCol), "fp", nBuckets)
-      .write.bucketBy(nBuckets, "fp")
-      .option("path", s"$path/${table}_fps").mode("overwrite")
-      .saveAsTable(s"${table}_fps")
-    setParams(spark, s"${table}_fps",
-      Map("idCol" -> idCol, "payload" -> "vec"))
-  }
+      table: String, path: String, nBuckets: Int = 8): Unit =
+    writeBucketed(vecFps(vecs, idCol, vecCol), s"${table}_fps", path, "fp",
+      nBuckets, Map("idCol" -> idCol, "payload" -> "vec"))
 
   /** Appends delta vectors' fingerprint rows in place. */
   def appendExactVecIndex(delta: DataFrame, idCol: String, vecCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_fps",
+    requireParams(delta.sparkSession, s"${table}_fps",
       Map("idCol" -> idCol, "payload" -> "vec"), "append")
-    val nb = numBucketsOf(spark, s"${table}_fps")
-    bucketRouted(vecFps(delta, idCol, vecCol), "fp", nb)
-      .write.bucketBy(nb, "fp")
-      .mode("append").saveAsTable(s"${table}_fps")
-    noteAppend(spark, s"${table}_fps")
+    appendBucketed(vecFps(delta, idCol, vecCol), s"${table}_fps")
   }
 
   /** Byte-identical-vector probe — (query_id, match_id), the
@@ -1144,23 +1048,25 @@ object IndexStore {
     // attribution below re-references the original batch — unpinned,
     // that anti-join re-derives the caller's batch expression once more
     val batch0 = pinBatch(batch)
-    val (a1, _) = gateStage(batch0, idCol,
+    val (a1, m1) = gateStage(batch0, idCol,
       probe = b => probeExact(spark, b, idCol, textCol, exactTable,
         hotBandThreshold),
       innerPairs = b => exactInnerPairs(b, idCol, textCol))
-    val (a2, _) = gateStage(a1, idCol,
+    val (a2, m2) = gateStage(a1, idCol,
       probe = b => probeWinnow(spark, b, idCol, textCol, winnowTable,
         window, guarantee, hotBandThreshold)
         .where(col("n_shared_fps") >= minSharedFps),
       innerPairs = b => Dedup.winnowNearDupPairs(b, idCol, textCol,
         window, guarantee, minSharedFps, hotBandThreshold))
-    val (a3, _) = gateStage(a2, idCol,
+    val (a3, m3) = gateStage(a2, idCol,
       probe = b => probeMinhash(spark, b, idCol, textCol, minhashTable,
         shingleN, numHashes, bands, threshold, hotBandThreshold),
       innerPairs = b => Dedup.minhashNearDupPairs(b, idCol, textCol,
         shingleN, numHashes, bands, threshold, hotBandThreshold))
+    // the per-gate matches are spent (the accepted sets hold the cut);
     // each stage's output is pinned (gateStage), so these anti joins
     // replay materialized rows rather than re-probing the grown indexes
+    Seq(m1, m2, m3).foreach(Ops.freeLogicalRddBlocks(_))
     val cutAt = gateCut(idCol) _
     val decisions = cutAt(batch0, a1, "exact")
       .unionByName(cutAt(a1, a2, "winnow"))
@@ -1255,21 +1161,24 @@ object IndexStore {
       : (DataFrame, DataFrame) = {
     // pinned for the cut attribution's re-reference, as in the text gate
     val batch0 = pinBatch(batch)
-    val (a1, _) = gateStage(batch0, idCol,
+    val (a1, m1) = gateStage(batch0, idCol,
       probe = b => probeExactVec(spark, b, idCol, vecCol, exactTable,
         hotBandThreshold),
       innerPairs = b => vecInnerPairs(b, idCol, vecCol))
-    val (a2, _) = gateStage(a1, idCol,
+    val (a2, m2) = gateStage(a1, idCol,
       probe = b => probeSrpNearDup(spark, b, srpTable, threshold, idCol,
         vecCol, nPlanes, bands, dim, hotBandThreshold),
       innerPairs = b => Similarity.blockedNearDupPairs(b, threshold,
         idCol, vecCol, blockDims))
-    val a3 = ivfTable.fold(a2)(t =>
+    val ivfStage = ivfTable.map(t =>
       gateStage(a2, idCol,
         probe = b => probeIvfNearDup(spark, b, t, ivfThreshold,
           ivfNprobe, idCol, vecCol),
         innerPairs = b => Similarity.blockedNearDupPairs(b, ivfThreshold,
-          idCol, vecCol, blockDims))._1)
+          idCol, vecCol, blockDims)))
+    val a3 = ivfStage.fold(a2)(_._1)
+    // spent matches, as in the text gate
+    (Seq(m1, m2) ++ ivfStage.map(_._2)).foreach(Ops.freeLogicalRddBlocks(_))
     val cutAt = gateCut(idCol) _
     val decisions = cutAt(batch0, a1, "exact")
       .unionByName(cutAt(a1, a2, "srp"))
@@ -1307,31 +1216,29 @@ object IndexStore {
     * document must stop gating future batches at EVERY gate at once —
     * deleting it from only one index would leave the others silently
     * rejecting re-submissions of content the pipeline no longer owns.
-    * Each per-kind erasure is the existing bucket-preserving rewrite
-    * ([[deleteFromTable]]); retired directories stay until the caller
-    * vacuums per kind. */
+    * Each per-kind erasure is the generic bucket-preserving rewrite
+    * ([[deleteFrom]]); retired directories stay until the caller
+    * vacuums per kind. `idCol` is checked against every gate table's
+    * build-time id column before anything is rewritten. */
   def deleteFromGateIndexes(spark: SparkSession, ids: DataFrame,
       idCol: String, exactTable: String, winnowTable: String,
       minhashTable: String, newPathBase: String): Unit = {
-    deleteFromExactIndex(spark, exactTable, ids,
-      s"$newPathBase/$exactTable")
-    deleteFromWinnowIndex(spark, winnowTable, ids,
-      s"$newPathBase/$winnowTable")
-    deleteFromMinhashIndex(spark, minhashTable, idCol, ids,
-      s"$newPathBase/$minhashTable")
+    val gates = Seq("exact" -> exactTable, "winnow" -> winnowTable,
+      "minhash" -> minhashTable)
+    gates.foreach { case (kind, t) => requireParams(spark,
+      tablesOf(kind, t).head, Map("idCol" -> idCol), "delete") }
+    gates.foreach { case (kind, t) =>
+      deleteFrom(spark, kind, t, ids, s"$newPathBase/$t") }
   }
 
   /** [[deleteFromGateIndexes]] for the EMBEDDING gate: exact-vec + SRP
     * (+ IVF when the third gate slot is in use). */
   def deleteFromGateVecIndexes(spark: SparkSession, ids: DataFrame,
       exactTable: String, srpTable: String, newPathBase: String,
-      ivfTable: Option[String] = None): Unit = {
-    deleteFromExactIndex(spark, exactTable, ids,
-      s"$newPathBase/$exactTable")
-    deleteFromSrpIndex(spark, srpTable, ids, s"$newPathBase/$srpTable")
-    ivfTable.foreach(t =>
-      deleteFromIvfIndex(spark, t, ids, s"$newPathBase/$t"))
-  }
+      ivfTable: Option[String] = None): Unit =
+    (Seq("exact" -> exactTable, "srp" -> srpTable) ++ ivfTable.map("ivf" -> _))
+      .foreach { case (kind, t) =>
+        deleteFrom(spark, kind, t, ids, s"$newPathBase/$t") }
 
   /** Near-dup probe against a persisted IVF index — the contract of
     * [[probeSrpNearDup]] served from trained inverted lists: every
@@ -1396,7 +1303,6 @@ object IndexStore {
       idCol: String = "vec_id", vecCol: String = "vec",
       nPlanes: Int = 16, bands: Int = 4, dim: Int = 64,
       nBuckets: Int = 8): Unit = {
-    val spark = corpus.sparkSession
     // "quantized" recorded explicitly (not just absent) so a quantized
     // probe against an fp index — and vice versa — fails loud at
     // validation instead of on a missing column mid-plan
@@ -1407,20 +1313,10 @@ object IndexStore {
       // two independent tables off one persisted staging frame —
       // overlapped, like buildMinhashIndex
       Ops.concurrently(
-        () => {
-          bucketRouted(srpBandRows(vecs, idCol, vecCol, nPlanes, bands, dim),
-              "band_key", nBuckets)
-            .write.bucketBy(nBuckets, "band_key")
-            .option("path", s"$path/${table}_bands").mode("overwrite")
-            .saveAsTable(s"${table}_bands")
-          setParams(spark, s"${table}_bands", params)
-        },
-        () => {
-          bucketRouted(vecs, idCol, nBuckets).write.bucketBy(nBuckets, idCol)
-            .option("path", s"$path/${table}_vecs").mode("overwrite")
-            .saveAsTable(s"${table}_vecs")
-          setParams(spark, s"${table}_vecs", params)
-        })
+        () => writeBucketed(srpBandRows(vecs, idCol, vecCol, nPlanes, bands,
+          dim), s"${table}_bands", path, "band_key", nBuckets, params),
+        () => writeBucketed(vecs, s"${table}_vecs", path, idCol, nBuckets,
+          params))
     }
   }
 
@@ -1430,23 +1326,16 @@ object IndexStore {
   def appendSrpIndex(delta: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "vec",
       nPlanes: Int = 16, bands: Int = 4, dim: Int = 64): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_bands",
+    requireParams(delta.sparkSession, s"${table}_bands",
       srpParams(nPlanes, bands, dim, idCol, vecCol)
         + ("quantized" -> "none"), "append")
     val vecs = Ops.spreadForHash(delta.select(col(idCol), col(vecCol)))
     withPersisted(vecs) { // feeds both writes, overlapped
-      val nbB = numBucketsOf(spark, s"${table}_bands")
-      val nbV = numBucketsOf(spark, s"${table}_vecs")
       Ops.concurrently(
-        () => bucketRouted(srpBandRows(vecs, idCol, vecCol, nPlanes,
-            bands, dim), "band_key", nbB)
-          .write.bucketBy(nbB, "band_key")
-          .mode("append").saveAsTable(s"${table}_bands"),
-        () => bucketRouted(vecs, idCol, nbV).write.bucketBy(nbV, idCol)
-          .mode("append").saveAsTable(s"${table}_vecs"))
+        () => appendBucketed(srpBandRows(vecs, idCol, vecCol, nPlanes,
+          bands, dim), s"${table}_bands"),
+        () => appendBucketed(vecs, s"${table}_vecs"))
     }
-    Seq(s"${table}_bands", s"${table}_vecs").foreach(noteAppend(spark, _))
   }
 
   /** Builds a QUANTIZED SRP index: the band table is identical to
@@ -1460,27 +1349,19 @@ object IndexStore {
       path: String, idCol: String = "vec_id", vecCol: String = "vec",
       nPlanes: Int = 16, bands: Int = 4, dim: Int = 64,
       nBuckets: Int = 8): Unit = {
-    val spark = corpus.sparkSession
     val params = srpParams(nPlanes, bands, dim, idCol, vecCol) +
       ("quantized" -> "int8")
     val vecs = Ops.spreadForHash(corpus.select(col(idCol), col(vecCol)))
     withPersisted(vecs) {
-      bucketRouted(srpBandRows(vecs, idCol, vecCol, nPlanes, bands, dim),
-          "band_key", nBuckets)
-        .write.bucketBy(nBuckets, "band_key")
-        .option("path", s"$path/${table}_bands").mode("overwrite")
-        .saveAsTable(s"${table}_bands")
-      setParams(spark, s"${table}_bands", params)
+      writeBucketed(srpBandRows(vecs, idCol, vecCol, nPlanes, bands, dim),
+        s"${table}_bands", path, "band_key", nBuckets, params)
       val quant = vecs
         .withColumn("__scale", Similarity.int8Scale(col(vecCol)))
         .select(col(idCol),
           Similarity.int8Codes(col(vecCol), col("__scale"))
             .cast("array<tinyint>").as("codes"),
           coalesce(col("__scale"), lit(0.0)).as("scale"))
-      bucketRouted(quant, idCol, nBuckets).write.bucketBy(nBuckets, idCol)
-        .option("path", s"$path/${table}_vecs").mode("overwrite")
-        .saveAsTable(s"${table}_vecs")
-      setParams(spark, s"${table}_vecs", params)
+      writeBucketed(quant, s"${table}_vecs", path, idCol, nBuckets, params)
     }
   }
 
@@ -1624,28 +1505,6 @@ object IndexStore {
         round(col("cos_raw"), 6).as("cos_sim"))
   }
 
-  /** Deletes vectors from an SRP index (band + vector tables). */
-  def deleteFromSrpIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String): Unit = {
-    val idCol = getParams(spark, s"${table}_bands")
-      .getOrElse("idCol", "vec_id")
-    Seq(s"${table}_bands", s"${table}_vecs").foreach(t =>
-      deleteFromTable(spark, t, bucketColOf(spark, t), idCol, ids,
-        s"$newPathBase/${t}_d", numBucketsOf(spark, t)))
-  }
-
-  /** Compacts both SRP index tables. */
-  def compactSrpIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit =
-    Seq(s"${table}_bands", s"${table}_vecs").foreach(t =>
-      compactTable(spark, t, bucketColOf(spark, t),
-        s"$newPathBase/${t}_c", numBucketsOf(spark, t)))
-
-  /** Vacuums both SRP index tables' retired directories. */
-  def vacuumSrpIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_bands") ++
-      vacuumIndexTable(spark, s"${table}_vecs")
-
   /** Compacts a bucketed index table: every append leaves one file set
     * per bucket, so a long-lived index accumulates small files (slower
     * scans, more tasks). This rewrites the table's rows into exactly one
@@ -1767,28 +1626,21 @@ object IndexStore {
   /** Builds the persisted LM: (bg, cb) bucketed by bg, so the scoring
     * join and every derived statistic read the model co-located. */
   def buildLmIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, path: String, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(NgramLm.bigramCounts(docs, idCol, textCol), "bg", nBuckets)
-      .write.bucketBy(nBuckets, "bg")
-      .option("path", s"$path/${table}_counts").mode("overwrite")
-      .saveAsTable(s"${table}_counts")
-    setParams(spark, s"${table}_counts",
-      Map("idCol" -> idCol, "payload" -> "text", "ngram" -> "2"))
-  }
+      table: String, path: String, nBuckets: Int = 8): Unit =
+    writeBucketed(NgramLm.bigramCounts(docs, idCol, textCol),
+      s"${table}_counts", path, "bg", nBuckets, lmParams(idCol))
+
+  private def lmParams(idCol: String): Map[String, String] =
+    Map("idCol" -> idCol, "payload" -> "text", "ngram" -> "2")
 
   /** Appends delta docs' count rows in place — the nightly re-train
     * reduced to one aggregation over the new slice. */
   def appendLmIndex(delta: DataFrame, idCol: String, textCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_counts",
-      Map("idCol" -> idCol, "payload" -> "text", "ngram" -> "2"), "append")
-    val nb = numBucketsOf(spark, s"${table}_counts")
-    bucketRouted(NgramLm.bigramCounts(delta, idCol, textCol), "bg", nb)
-      .write.bucketBy(nb, "bg")
-      .mode("append").saveAsTable(s"${table}_counts")
-    noteAppend(spark, s"${table}_counts")
+    requireParams(delta.sparkSession, s"${table}_counts", lmParams(idCol),
+      "append")
+    appendBucketed(NgramLm.bigramCounts(delta, idCol, textCol),
+      s"${table}_counts")
   }
 
   /** Exact unlearning: appends the docs' count rows NEGATED. The next
@@ -1796,15 +1648,10 @@ object IndexStore {
     * then [[lmModelFromIndex]]'s merge cancels them logically. */
   def unlearnFromLmIndex(docs: DataFrame, idCol: String, textCol: String,
       table: String): Unit = {
-    val spark = docs.sparkSession
-    requireParams(spark, s"${table}_counts",
-      Map("idCol" -> idCol, "payload" -> "text", "ngram" -> "2"), "unlearn")
-    val nb = numBucketsOf(spark, s"${table}_counts")
-    bucketRouted(NgramLm.bigramCounts(docs, idCol, textCol)
-        .withColumn("cb", -col("cb")), "bg", nb)
-      .write.bucketBy(nb, "bg")
-      .mode("append").saveAsTable(s"${table}_counts")
-    noteAppend(spark, s"${table}_counts")
+    requireParams(docs.sparkSession, s"${table}_counts", lmParams(idCol),
+      "unlearn")
+    appendBucketed(NgramLm.bigramCounts(docs, idCol, textCol)
+      .withColumn("cb", -col("cb")), s"${table}_counts")
   }
 
   /** The live model: appended (and negated) count rows merged by
@@ -1825,21 +1672,6 @@ object IndexStore {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     NgramLm.scoreMicroBits(lmModelFromIndex(spark, table), docs,
       idCol, textCol)
-
-  /** Compacts the LM count table: folds duplicate bigram rows and
-    * cancellation pairs into one positive row each — the one kind whose
-    * compaction changes row COUNT (not just file count) by design. */
-  def compactLmIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val counts = s"${table}_counts"
-    rewriteInPlace(spark, counts, bucketColOf(spark, counts),
-      s"$newPathBase/${counts}_c", numBucketsOf(spark, counts))(
-      _.groupBy("bg").agg(sum(col("cb")).as("cb")).where(col("cb") > 0))
-  }
-
-  /** Vacuums the LM table's retired directories. */
-  def vacuumLmIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_counts")
 
   // ---- DSIR importance-model table -----------------------------------
   // The eighth persisted kind, and the second holding MODEL STATE: the
@@ -1871,30 +1703,20 @@ object IndexStore {
   /** Builds the persisted DSIR model from the two corpora. */
   def buildDsirIndex(target: DataFrame, raw: DataFrame, idCol: String,
       textCol: String, table: String, path: String, hexChars: Int = 2,
-      nBuckets: Int = 4): Unit = {
-    val spark = target.sparkSession
-    val counts = dsirSideCounts(target, idCol, textCol, hexChars, "t")
-      .unionByName(dsirSideCounts(raw, idCol, textCol, hexChars, "r"))
-    bucketRouted(counts, "bucket", nBuckets)
-      .write.bucketBy(nBuckets, "bucket")
-      .option("path", s"$path/${table}_counts").mode("overwrite")
-      .saveAsTable(s"${table}_counts")
-    setParams(spark, s"${table}_counts", dsirParams(idCol, hexChars))
-  }
+      nBuckets: Int = 4): Unit =
+    writeBucketed(dsirSideCounts(target, idCol, textCol, hexChars, "t")
+        .unionByName(dsirSideCounts(raw, idCol, textCol, hexChars, "r")),
+      s"${table}_counts", path, "bucket", nBuckets,
+      dsirParams(idCol, hexChars))
 
   /** Appends a delta corpus's counts to one side — the nightly refit
     * reduced to one bounded aggregation over the new slice. */
   def appendDsirIndex(delta: DataFrame, side: String, idCol: String,
       textCol: String, table: String): Unit = {
     require(side == "t" || side == "r", s"side must be 't' or 'r': $side")
-    val spark = delta.sparkSession
-    val hexChars = dsirHexChars(spark, table, idCol, "append")
-    val nb = numBucketsOf(spark, s"${table}_counts")
-    bucketRouted(dsirSideCounts(delta, idCol, textCol, hexChars, side),
-        "bucket", nb)
-      .write.bucketBy(nb, "bucket")
-      .mode("append").saveAsTable(s"${table}_counts")
-    noteAppend(spark, s"${table}_counts")
+    val hexChars = dsirHexChars(delta.sparkSession, table, idCol, "append")
+    appendBucketed(dsirSideCounts(delta, idCol, textCol, hexChars, side),
+      s"${table}_counts")
   }
 
   /** Exact unlearning: appends the docs' counts NEGATED on their side.
@@ -1903,14 +1725,9 @@ object IndexStore {
   def unlearnFromDsirIndex(docs: DataFrame, side: String, idCol: String,
       textCol: String, table: String): Unit = {
     require(side == "t" || side == "r", s"side must be 't' or 'r': $side")
-    val spark = docs.sparkSession
-    val hexChars = dsirHexChars(spark, table, idCol, "unlearn")
-    val nb = numBucketsOf(spark, s"${table}_counts")
-    bucketRouted(dsirSideCounts(docs, idCol, textCol, hexChars, side)
-        .withColumn("c", -col("c")), "bucket", nb)
-      .write.bucketBy(nb, "bucket")
-      .mode("append").saveAsTable(s"${table}_counts")
-    noteAppend(spark, s"${table}_counts")
+    val hexChars = dsirHexChars(docs.sparkSession, table, idCol, "unlearn")
+    appendBucketed(dsirSideCounts(docs, idCol, textCol, hexChars, side)
+      .withColumn("c", -col("c")), s"${table}_counts")
   }
 
   private def dsirHexChars(spark: SparkSession, table: String,
@@ -1944,21 +1761,6 @@ object IndexStore {
     Dsir.scoreWeights(dsirModelFromIndex(spark, table), docs,
       idCol, textCol)
 
-  /** Compacts: folds duplicate and cancellation rows into one positive
-    * row per (bucket, side) — row-count-changing, like the LM's. */
-  def compactDsirIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val counts = s"${table}_counts"
-    rewriteInPlace(spark, counts, bucketColOf(spark, counts),
-      s"$newPathBase/${counts}_c", numBucketsOf(spark, counts))(
-      _.groupBy("bucket", "side").agg(sum(col("c")).as("c"))
-        .where(col("c") > 0))
-  }
-
-  /** Vacuums the DSIR table's retired directories. */
-  def vacuumDsirIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_counts")
-
   // ---- DoReMi mixture-model table ------------------------------------
   // The eleventh persisted kind, fourth holding MODEL STATE: the
   // per-(source, bigram) counts behind [[Doremi]] domain reweighting.
@@ -1987,43 +1789,28 @@ object IndexStore {
   /** Builds the persisted mixture model. */
   def buildDoremiIndex(docs: DataFrame, idCol: String, srcCol: String,
       textCol: String, table: String, path: String,
-      nBuckets: Int = 4): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(doremiCounts(docs, idCol, srcCol, textCol), "bg",
-        nBuckets)
-      .write.bucketBy(nBuckets, "bg")
-      .option("path", s"$path/${table}_dmc").mode("overwrite")
-      .saveAsTable(s"${table}_dmc")
-    setParams(spark, s"${table}_dmc", doremiParams(idCol, srcCol))
-  }
+      nBuckets: Int = 4): Unit =
+    writeBucketed(doremiCounts(docs, idCol, srcCol, textCol),
+      s"${table}_dmc", path, "bg", nBuckets, doremiParams(idCol, srcCol))
 
   /** Appends a delta corpus's counts — additive, batch-order
     * independent. */
   def appendDoremiIndex(delta: DataFrame, idCol: String, srcCol: String,
       textCol: String, table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_dmc", doremiParams(idCol, srcCol),
-      "append")
-    val nb = numBucketsOf(spark, s"${table}_dmc")
-    bucketRouted(doremiCounts(delta, idCol, srcCol, textCol), "bg", nb)
-      .write.bucketBy(nb, "bg")
-      .mode("append").saveAsTable(s"${table}_dmc")
-    noteAppend(spark, s"${table}_dmc")
+    requireParams(delta.sparkSession, s"${table}_dmc",
+      doremiParams(idCol, srcCol), "append")
+    appendBucketed(doremiCounts(delta, idCol, srcCol, textCol),
+      s"${table}_dmc")
   }
 
   /** Exact unlearning: appends the docs' counts negated. Only unlearn
     * what was previously learned (the LM's ledger discipline). */
   def unlearnFromDoremiIndex(docs: DataFrame, idCol: String,
       srcCol: String, textCol: String, table: String): Unit = {
-    val spark = docs.sparkSession
-    requireParams(spark, s"${table}_dmc", doremiParams(idCol, srcCol),
-      "unlearn")
-    val nb = numBucketsOf(spark, s"${table}_dmc")
-    bucketRouted(doremiCounts(docs, idCol, srcCol, textCol)
-        .withColumn("cb", -col("cb")), "bg", nb)
-      .write.bucketBy(nb, "bg")
-      .mode("append").saveAsTable(s"${table}_dmc")
-    noteAppend(spark, s"${table}_dmc")
+    requireParams(docs.sparkSession, s"${table}_dmc",
+      doremiParams(idCol, srcCol), "unlearn")
+    appendBucketed(doremiCounts(docs, idCol, srcCol, textCol)
+      .withColumn("cb", -col("cb")), s"${table}_dmc")
   }
 
   /** Mixture weights from the persisted model — O(vocab), zero corpus
@@ -2038,21 +1825,6 @@ object IndexStore {
         .groupBy("source", "bg").agg(sum(col("cb")).as("cb"))
         .where(col("cb") > 0), cfg)
   }
-
-  /** Compacts: folds duplicate and cancellation rows into one positive
-    * row per (source, bg). */
-  def compactDoremiIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val dmc = s"${table}_dmc"
-    rewriteInPlace(spark, dmc, bucketColOf(spark, dmc),
-      s"$newPathBase/${dmc}_c", numBucketsOf(spark, dmc))(
-      _.groupBy("source", "bg").agg(sum(col("cb")).as("cb"))
-        .where(col("cb") > 0))
-  }
-
-  /** Vacuums the DoReMi table's retired directories. */
-  def vacuumDoremiIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_dmc")
 
   // ---- batch-KEYED DoReMi lifecycle (replay-exactly-once) -------------
   // The keyed-LM discipline applied to the mixture model's count table:
@@ -2074,16 +1846,10 @@ object IndexStore {
   def buildDoremiIndexKeyed(docs: DataFrame, idCol: String,
       srcCol: String, textCol: String, table: String, path: String,
       batchKey: Long = 0L, nBuckets: Int = 4): Unit = {
-    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
-    val spark = docs.sparkSession
-    bucketRouted(doremiCounts(docs, idCol, srcCol, textCol)
-        .withColumn("bk", lit(batchKey)), "bg", nBuckets)
-      .write.bucketBy(nBuckets, "bg")
-      .option("path", s"$path/${table}_dmc").mode("overwrite")
-      .saveAsTable(s"${table}_dmc")
-    setParams(spark, s"${table}_dmc",
-      doremiKeyedParams(idCol, srcCol) +
-        (LmBkHighWaterParam -> batchKey.toString))
+    val mark = buildWaterMark("doremik", batchKey)
+    writeBucketed(doremiCounts(docs, idCol, srcCol, textCol)
+        .withColumn("bk", lit(batchKey)), s"${table}_dmc", path, "bg",
+      nBuckets, doremiKeyedParams(idCol, srcCol) ++ mark)
   }
 
   /** Replay-idempotent append; returns whether the batch was APPLIED
@@ -2091,21 +1857,11 @@ object IndexStore {
   def appendDoremiIndexKeyed(delta: DataFrame, idCol: String,
       srcCol: String, textCol: String, table: String,
       batchKey: Long): Boolean = {
-    require(batchKey >= 0 && batchKey != LmFoldedBk,
-      s"append batchKey must be in-band (>= 0), got $batchKey")
-    val spark = delta.sparkSession
-    val dmc = s"${table}_dmc"
-    requireParams(spark, dmc, doremiKeyedParams(idCol, srcCol), "append")
-    if (batchKey <= lmWaterMark(spark, dmc, LmBkHighWaterParam, -1L))
-      false
-    else {
-      val nb = numBucketsOf(spark, dmc)
-      bucketRouted(doremiCounts(delta, idCol, srcCol, textCol)
-          .withColumn("bk", lit(batchKey)), "bg", nb)
-        .write.bucketBy(nb, "bg").mode("append").saveAsTable(dmc)
-      noteAppend(spark, dmc)
-      true
-    }
+    requireParams(delta.sparkSession, s"${table}_dmc",
+      doremiKeyedParams(idCol, srcCol), "append")
+    keyedBatch(delta.sparkSession, "doremik", table, batchKey, "append")(
+      doremiCounts(delta, idCol, srcCol, textCol)
+        .withColumn("bk", lit(batchKey)))
   }
 
   /** Mixture weights from the keyed table: (source, bg, bk)
@@ -2120,27 +1876,6 @@ object IndexStore {
         .dropDuplicates("source", "bg", "bk")
         .groupBy("source", "bg").agg(sum(col("cb")).as("cb"))
         .where(col("cb") > 0), cfg)
-  }
-
-  /** Compacts the keyed table: the high-water mark rises FIRST (the
-    * keyed-LM crash argument), then the fold dedups row identities,
-    * sums, drops cancellations, and stamps survivors with the fold
-    * sentinel. */
-  def compactDoremiIndexKeyed(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val dmc = s"${table}_dmc"
-    val hi = spark.table(dmc).where(col("bk") =!= LmFoldedBk)
-      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi")).head()
-    if (!hi.isNullAt(0))
-      setLmWaterMark(spark, dmc, LmBkHighWaterParam,
-        math.max(hi.getLong(0),
-          lmWaterMark(spark, dmc, LmBkHighWaterParam, -1L)))
-    rewriteInPlace(spark, dmc, bucketColOf(spark, dmc),
-      s"$newPathBase/${dmc}_c", numBucketsOf(spark, dmc))(
-      _.dropDuplicates("source", "bg", "bk")
-        .groupBy("source", "bg").agg(sum(col("cb")).as("cb"))
-        .where(col("cb") > 0)
-        .withColumn("bk", lit(LmFoldedBk)))
   }
 
   // ---- HLL distinct-count sketch store -------------------------------
@@ -2170,27 +1905,17 @@ object IndexStore {
     * idx. `items` is the exploded item frame (one row per occurrence —
     * the registers aggregation absorbs duplicates). */
   def buildHllIndex(items: DataFrame, grpCol: String, itemCol: String,
-      table: String, path: String, nBuckets: Int = 4): Unit = {
-    val spark = items.sparkSession
-    bucketRouted(hllRegs(items, grpCol, itemCol), "idx", nBuckets)
-      .write.bucketBy(nBuckets, "idx")
-      .option("path", s"$path/${table}_hregs").mode("overwrite")
-      .saveAsTable(s"${table}_hregs")
-    setParams(spark, s"${table}_hregs", hllParams(grpCol, itemCol))
-  }
+      table: String, path: String, nBuckets: Int = 4): Unit =
+    writeBucketed(hllRegs(items, grpCol, itemCol), s"${table}_hregs", path,
+      "idx", nBuckets, hllParams(grpCol, itemCol))
 
   /** Appends a delta corpus's registers — order-independent and
     * replay-idempotent by the max algebra. */
   def appendHllIndex(delta: DataFrame, grpCol: String, itemCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_hregs", hllParams(grpCol, itemCol),
-      "append")
-    val nb = numBucketsOf(spark, s"${table}_hregs")
-    bucketRouted(hllRegs(delta, grpCol, itemCol), "idx", nb)
-      .write.bucketBy(nb, "idx")
-      .mode("append").saveAsTable(s"${table}_hregs")
-    noteAppend(spark, s"${table}_hregs")
+    requireParams(delta.sparkSession, s"${table}_hregs",
+      hllParams(grpCol, itemCol), "append")
+    appendBucketed(hllRegs(delta, grpCol, itemCol), s"${table}_hregs")
   }
 
   /** Folded per-group registers from the store — O(registers), zero
@@ -2208,20 +1933,6 @@ object IndexStore {
   def hllEstimateFromIndex(spark: SparkSession, table: String)
       : DataFrame =
     Hll.estimate(hllRegistersFromIndex(spark, table), Seq("grp"))
-
-  /** Compacts: folds duplicate register rows to one row per
-    * (grp, idx). */
-  def compactHllIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val hr = s"${table}_hregs"
-    rewriteInPlace(spark, hr, bucketColOf(spark, hr),
-      s"$newPathBase/${hr}_c", numBucketsOf(spark, hr))(
-      Hll.fold(_, Seq("grp")))
-  }
-
-  /** Vacuums the sketch table's retired directories. */
-  def vacuumHllIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_hregs")
 
   // ---- distilled linear-gate weight table ----------------------------
   // The thirteenth persisted kind, and the first REFIT-ONLY one:
@@ -2243,14 +1954,11 @@ object IndexStore {
   def buildDistillIndex(labeled: DataFrame, bucketsCol: String,
       labelCol: String, table: String, path: String,
       cfg: Distill.Config = Distill.Config()): Unit = {
-    val spark = labeled.sparkSession
     val w = Distill.fit(labeled, bucketsCol, labelCol, cfg)
-    Distill.weightsFrame(spark, w)
-      .coalesce(1) // bounded ≤ 257 rows — the 1-row/datacard exception
-      .write.bucketBy(1, "bucket") // keeps the health/catalog contract
-      .option("path", s"$path/${table}_lw").mode("overwrite")
-      .saveAsTable(s"${table}_lw")
-    setParams(spark, s"${table}_lw", distillParams(cfg))
+    // one bucket: bounded ≤ 257 rows (the 1-row/datacard exception),
+    // still bucketed so the health/catalog contract holds
+    writeBucketed(Distill.weightsFrame(labeled.sparkSession, w),
+      s"${table}_lw", path, "bucket", 1, distillParams(cfg))
   }
 
   /** The persisted weights as the bounded driver map serving needs. */
@@ -2294,39 +2002,24 @@ object IndexStore {
 
   /** Builds the persisted shingle-DF table: (s, nd) bucketed by s. */
   def buildSpanIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, path: String, k: Int = 8, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(spanDfCounts(docs, idCol, textCol, k), "s", nBuckets)
-      .write.bucketBy(nBuckets, "s")
-      .option("path", s"$path/${table}_sdf").mode("overwrite")
-      .saveAsTable(s"${table}_sdf")
-    setParams(spark, s"${table}_sdf", spanParams(idCol, k))
-  }
+      table: String, path: String, k: Int = 8, nBuckets: Int = 8): Unit =
+    writeBucketed(spanDfCounts(docs, idCol, textCol, k), s"${table}_sdf",
+      path, "s", nBuckets, spanParams(idCol, k))
 
   /** Appends delta docs' indicator rows in place — the nightly rebuild
     * reduced to one aggregation over the new slice. */
   def appendSpanIndex(delta: DataFrame, idCol: String, textCol: String,
       table: String): Unit = {
-    val spark = delta.sparkSession
-    val k = spanK(spark, table, idCol, "append")
-    val nb = numBucketsOf(spark, s"${table}_sdf")
-    bucketRouted(spanDfCounts(delta, idCol, textCol, k), "s", nb)
-      .write.bucketBy(nb, "s")
-      .mode("append").saveAsTable(s"${table}_sdf")
-    noteAppend(spark, s"${table}_sdf")
+    val k = spanK(delta.sparkSession, table, idCol, "append")
+    appendBucketed(spanDfCounts(delta, idCol, textCol, k), s"${table}_sdf")
   }
 
   /** Exact unlearning: appends the docs' indicator rows NEGATED. */
   def unlearnFromSpanIndex(docs: DataFrame, idCol: String,
       textCol: String, table: String): Unit = {
-    val spark = docs.sparkSession
-    val k = spanK(spark, table, idCol, "unlearn")
-    val nb = numBucketsOf(spark, s"${table}_sdf")
-    bucketRouted(spanDfCounts(docs, idCol, textCol, k)
-        .withColumn("nd", -col("nd")), "s", nb)
-      .write.bucketBy(nb, "s")
-      .mode("append").saveAsTable(s"${table}_sdf")
-    noteAppend(spark, s"${table}_sdf")
+    val k = spanK(docs.sparkSession, table, idCol, "unlearn")
+    appendBucketed(spanDfCounts(docs, idCol, textCol, k)
+      .withColumn("nd", -col("nd")), s"${table}_sdf")
   }
 
   private def spanK(spark: SparkSession, table: String, idCol: String,
@@ -2360,20 +2053,6 @@ object IndexStore {
       spanHotFromIndex(spark, table, minDocs), k)
   }
 
-  /** Compacts: folds duplicate and cancellation rows into one positive
-    * row per shingle — row-count-changing, like the LM's. */
-  def compactSpanIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val sdf = s"${table}_sdf"
-    rewriteInPlace(spark, sdf, bucketColOf(spark, sdf),
-      s"$newPathBase/${sdf}_c", numBucketsOf(spark, sdf))(
-      _.groupBy("s").agg(sum(col("nd")).as("nd")).where(col("nd") > 0))
-  }
-
-  /** Vacuums the shingle-DF table's retired directories. */
-  def vacuumSpanIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_sdf")
-
   // ---- PQ code store -------------------------------------------------
   // The tenth persisted kind: the product-quantization serving store
   // ([[Pq]]) — a `_books` table holding the m×ksub×(d/m) codebooks
@@ -2405,13 +2084,9 @@ object IndexStore {
       .coalesce(1) // bounded model table — the documented exception
       .write.option("path", s"$path/${table}_books").mode("overwrite")
       .saveAsTable(s"${table}_books")
-    bucketRouted(Pq.encode(pinned, books, dim, idCol, vecCol),
-        idCol, nBuckets)
-      .write.bucketBy(nBuckets, idCol)
-      .option("path", s"$path/${table}_codes").mode("overwrite")
-      .saveAsTable(s"${table}_codes")
-    Seq(s"${table}_books", s"${table}_codes").foreach(t =>
-      setParams(spark, t, pqParams(idCol, dim, m, ksub)))
+    setParams(spark, s"${table}_books", pqParams(idCol, dim, m, ksub))
+    writeBucketed(Pq.encode(pinned, books, dim, idCol, vecCol),
+      s"${table}_codes", path, idCol, nBuckets, pqParams(idCol, dim, m, ksub))
   }
 
   /** The persisted codebooks, driver-side (m×ksub rows — bounded). */
@@ -2432,12 +2107,8 @@ object IndexStore {
     requireParams(spark, s"${table}_codes",
       pqParams(idCol, params("dim").toInt, params("m").toInt,
         params("ksub").toInt), "append")
-    val nb = numBucketsOf(spark, s"${table}_codes")
-    bucketRouted(Pq.encode(delta, pqBooksFromIndex(spark, table),
-        params("dim").toInt, idCol, vecCol), idCol, nb)
-      .write.bucketBy(nb, idCol)
-      .mode("append").saveAsTable(s"${table}_codes")
-    noteAppend(spark, s"${table}_codes")
+    appendBucketed(Pq.encode(delta, pqBooksFromIndex(spark, table),
+      params("dim").toInt, idCol, vecCol), s"${table}_codes")
   }
 
   /** ADC top-k served from the persisted store — value-identical to
@@ -2454,29 +2125,6 @@ object IndexStore {
       idCol, vecCol)
   }
 
-  /** Deletes vectors from the code store — the take-down path (the
-    * codebooks are aggregate model state with no per-vector provenance,
-    * the LM-table stance; the code ROWS are the erasure unit). */
-  def deleteFromPqIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String,
-      idCol: String = "vec_id"): Unit = {
-    val codes = s"${table}_codes"
-    deleteFromTable(spark, codes, bucketColOf(spark, codes), idCol, ids,
-      s"$newPathBase/${codes}_d", numBucketsOf(spark, codes))
-  }
-
-  /** Compacts the code table's files (content unchanged). */
-  def compactPqIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val codes = s"${table}_codes"
-    compactTable(spark, codes, bucketColOf(spark, codes),
-      s"$newPathBase/${codes}_c", numBucketsOf(spark, codes))
-  }
-
-  /** Vacuums the code table's retired directories. */
-  def vacuumPqIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_codes")
-
   // ---- batch-KEYED LM lifecycle (replay-exactly-once) ---------------
   // The unkeyed LM append is additive, so a crash-replayed micro-batch
   // double-counts its slice — no ordering fixes that (the bucketed
@@ -2487,27 +2135,10 @@ object IndexStore {
   // keys away, so it first raises a high-water mark (BEFORE its atomic
   // swap — a crash between leaves the un-folded rows in place and the
   // mark merely re-skips an applied batch) and appends at or below the
-  // mark are skipped entirely. Key discipline: in-band appends use the
-  // stream's monotone non-negative batch ids; out-of-band unlearns use
-  // strictly DECREASING negative keys (they have no natural sequence,
-  // so they get their own low-water mark); Long.MinValue is the folded
-  // row's sentinel and is never a legal caller key.
+  // mark are skipped entirely (the key discipline: [[keyedBatch]]).
 
-  private val LmBkHighWaterParam = "lmBkHighWater"
-  private val LmBkNegLowWaterParam = "lmBkNegLowWater"
-  private val LmFoldedBk = Long.MinValue
-
-  private def lmKeyedParams(idCol: String) = Map("idCol" -> idCol,
-    "payload" -> "text", "ngram" -> "2", "keyed" -> "true")
-
-  private def lmWaterMark(spark: SparkSession, counts: String,
-      param: String, default: Long): Long =
-    getParams(spark, counts).get(param).map(_.toLong).getOrElse(default)
-
-  private def setLmWaterMark(spark: SparkSession, counts: String,
-      param: String, v: Long): Unit =
-    spark.sql(s"ALTER TABLE $counts SET TBLPROPERTIES " +
-      s"('$ParamPrefix$param'='$v')")
+  private def lmKeyedParams(idCol: String) =
+    lmParams(idCol) + ("keyed" -> "true")
 
   /** Builds the keyed LM table; `batchKey` (the building stream's first
     * batch id) becomes the initial high-water mark, so a crash-replay
@@ -2516,15 +2147,10 @@ object IndexStore {
   def buildLmIndexKeyed(docs: DataFrame, idCol: String, textCol: String,
       table: String, path: String, batchKey: Long = 0L,
       nBuckets: Int = 8): Unit = {
-    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
-    val spark = docs.sparkSession
-    bucketRouted(NgramLm.bigramCounts(docs, idCol, textCol)
-        .withColumn("bk", lit(batchKey)), "bg", nBuckets)
-      .write.bucketBy(nBuckets, "bg")
-      .option("path", s"$path/${table}_counts").mode("overwrite")
-      .saveAsTable(s"${table}_counts")
-    setParams(spark, s"${table}_counts",
-      lmKeyedParams(idCol) + (LmBkHighWaterParam -> batchKey.toString))
+    val mark = buildWaterMark("lmk", batchKey)
+    writeBucketed(NgramLm.bigramCounts(docs, idCol, textCol)
+        .withColumn("bk", lit(batchKey)), s"${table}_counts", path, "bg",
+      nBuckets, lmKeyedParams(idCol) ++ mark)
   }
 
   /** Replay-idempotent append. Returns whether the batch was APPLIED —
@@ -2534,21 +2160,11 @@ object IndexStore {
     * (bg, bk) dedup in [[lmModelFromIndexKeyed]] cancels them. */
   def appendLmIndexKeyed(delta: DataFrame, idCol: String, textCol: String,
       table: String, batchKey: Long): Boolean = {
-    require(batchKey >= 0 && batchKey != LmFoldedBk,
-      s"append batchKey must be in-band (>= 0), got $batchKey")
-    val spark = delta.sparkSession
-    val counts = s"${table}_counts"
-    requireParams(spark, counts, lmKeyedParams(idCol), "append")
-    if (batchKey <= lmWaterMark(spark, counts, LmBkHighWaterParam, -1L))
-      false
-    else {
-      val nb = numBucketsOf(spark, counts)
-      bucketRouted(NgramLm.bigramCounts(delta, idCol, textCol)
-          .withColumn("bk", lit(batchKey)), "bg", nb)
-        .write.bucketBy(nb, "bg").mode("append").saveAsTable(counts)
-      noteAppend(spark, counts)
-      true
-    }
+    requireParams(delta.sparkSession, s"${table}_counts",
+      lmKeyedParams(idCol), "append")
+    keyedBatch(delta.sparkSession, "lmk", table, batchKey, "append")(
+      NgramLm.bigramCounts(delta, idCol, textCol)
+        .withColumn("bk", lit(batchKey)))
   }
 
   /** Replay-idempotent exact unlearning: negated counts under a
@@ -2557,22 +2173,12 @@ object IndexStore {
     * first unlearn uses -1, the next -2, …). Returns whether applied. */
   def unlearnFromLmIndexKeyed(docs: DataFrame, idCol: String,
       textCol: String, table: String, batchKey: Long): Boolean = {
-    require(batchKey < 0 && batchKey != LmFoldedBk,
-      s"unlearn batchKey must be negative (out-of-band), got $batchKey")
-    val spark = docs.sparkSession
-    val counts = s"${table}_counts"
-    requireParams(spark, counts, lmKeyedParams(idCol), "unlearn")
-    val low = lmWaterMark(spark, counts, LmBkNegLowWaterParam, 0L)
-    if (batchKey >= low) false
-    else {
-      val nb = numBucketsOf(spark, counts)
-      bucketRouted(NgramLm.bigramCounts(docs, idCol, textCol)
-          .withColumn("cb", -col("cb"))
-          .withColumn("bk", lit(batchKey)), "bg", nb)
-        .write.bucketBy(nb, "bg").mode("append").saveAsTable(counts)
-      noteAppend(spark, counts)
-      true
-    }
+    requireParams(docs.sparkSession, s"${table}_counts",
+      lmKeyedParams(idCol), "unlearn")
+    keyedBatch(docs.sparkSession, "lmk", table, batchKey, "unlearn")(
+      NgramLm.bigramCounts(docs, idCol, textCol)
+        .withColumn("cb", -col("cb"))
+        .withColumn("bk", lit(batchKey)))
   }
 
   /** The live model from a keyed table: (bg, bk) row-identity dedup —
@@ -2593,34 +2199,6 @@ object IndexStore {
       textCol: String = "text"): DataFrame =
     NgramLm.scoreMicroBits(lmModelFromIndexKeyed(spark, table), docs,
       idCol, textCol)
-
-  /** Compacts the keyed LM table. Water marks move FIRST (a crash
-    * between the marks and the swap leaves the un-folded rows in place,
-    * where replay duplicates are still cancelled row-wise; the moved
-    * marks then merely skip batches that were genuinely applied), then
-    * the fold dedups (bg, bk), sums, drops cancelled bigrams, and
-    * stamps surviving rows with the fold sentinel. */
-  def compactLmIndexKeyed(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val counts = s"${table}_counts"
-    val marks = spark.table(counts).where(col("bk") =!= LmFoldedBk)
-      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi"),
-        min(when(col("bk") < 0, col("bk"))).as("lo")).head()
-    if (!marks.isNullAt(0))
-      setLmWaterMark(spark, counts, LmBkHighWaterParam,
-        math.max(marks.getLong(0),
-          lmWaterMark(spark, counts, LmBkHighWaterParam, -1L)))
-    if (!marks.isNullAt(1))
-      setLmWaterMark(spark, counts, LmBkNegLowWaterParam,
-        math.min(marks.getLong(1),
-          lmWaterMark(spark, counts, LmBkNegLowWaterParam, 0L)))
-    rewriteInPlace(spark, counts, bucketColOf(spark, counts),
-      s"$newPathBase/${counts}_c", numBucketsOf(spark, counts))(
-      _.dropDuplicates("bg", "bk")
-        .groupBy("bg").agg(sum(col("cb")).as("cb"))
-        .where(col("cb") > 0)
-        .withColumn("bk", lit(LmFoldedBk)))
-  }
 
   // ---- source-SLICED LM table (ablation serving) ---------------------
   // A layout variant of the LM kind: (grp, bg, cb) — the per-source
@@ -2645,41 +2223,26 @@ object IndexStore {
   /** Builds the persisted slice table — ONE corpus pass for every
     * future panel member. */
   def buildLmSliceIndex(docs: DataFrame, srcCol: String, textCol: String,
-      table: String, path: String, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    bucketRouted(lmSliceRows(docs, srcCol, textCol), "bg", nBuckets)
-      .write.bucketBy(nBuckets, "bg")
-      .option("path", s"$path/${table}_slices").mode("overwrite")
-      .saveAsTable(s"${table}_slices")
-    setParams(spark, s"${table}_slices", lmSliceParams(srcCol))
-  }
+      table: String, path: String, nBuckets: Int = 8): Unit =
+    writeBucketed(lmSliceRows(docs, srcCol, textCol), s"${table}_slices",
+      path, "bg", nBuckets, lmSliceParams(srcCol))
 
   /** Appends delta docs' slice rows (their own sources ride along). */
   def appendLmSliceIndex(delta: DataFrame, srcCol: String,
       textCol: String, table: String): Unit = {
-    val spark = delta.sparkSession
-    requireParams(spark, s"${table}_slices", lmSliceParams(srcCol),
-      "append")
-    val nb = numBucketsOf(spark, s"${table}_slices")
-    bucketRouted(lmSliceRows(delta, srcCol, textCol), "bg", nb)
-      .write.bucketBy(nb, "bg").mode("append")
-      .saveAsTable(s"${table}_slices")
-    noteAppend(spark, s"${table}_slices")
+    requireParams(delta.sparkSession, s"${table}_slices",
+      lmSliceParams(srcCol), "append")
+    appendBucketed(lmSliceRows(delta, srcCol, textCol), s"${table}_slices")
   }
 
   /** Exact unlearning: negated slice rows; the next compaction folds
     * the cancellation pairs away physically. */
   def unlearnFromLmSliceIndex(docs: DataFrame, srcCol: String,
       textCol: String, table: String): Unit = {
-    val spark = docs.sparkSession
-    requireParams(spark, s"${table}_slices", lmSliceParams(srcCol),
-      "unlearn")
-    val nb = numBucketsOf(spark, s"${table}_slices")
-    bucketRouted(lmSliceRows(docs, srcCol, textCol)
-        .withColumn("cb", -col("cb")), "bg", nb)
-      .write.bucketBy(nb, "bg").mode("append")
-      .saveAsTable(s"${table}_slices")
-    noteAppend(spark, s"${table}_slices")
+    requireParams(docs.sparkSession, s"${table}_slices",
+      lmSliceParams(srcCol), "unlearn")
+    appendBucketed(lmSliceRows(docs, srcCol, textCol)
+      .withColumn("cb", -col("cb")), s"${table}_slices")
   }
 
   /** The live model with `excludeGrp`'s slice held out (None = the
@@ -2696,20 +2259,6 @@ object IndexStore {
       kept.groupBy("bg").agg(sum(col("cb")).as("cb"))
         .where(col("cb") > 0)))
   }
-
-  /** Compacts: folds duplicate (grp, bg) rows and cancellation pairs. */
-  def compactLmSliceIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val slices = s"${table}_slices"
-    rewriteInPlace(spark, slices, bucketColOf(spark, slices),
-      s"$newPathBase/${slices}_c", numBucketsOf(spark, slices))(
-      _.groupBy("grp", "bg").agg(sum(col("cb")).as("cb"))
-        .where(col("cb") =!= 0L))
-  }
-
-  /** Vacuums the slice table's retired directories. */
-  def vacuumLmSliceIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_slices")
 
   // ---- Count-Min frequency sketch store ------------------------------
   // The fourteenth persisted kind: [[CountMin]] registers per group —
@@ -2729,10 +2278,6 @@ object IndexStore {
   // skipped entirely. In-band appends use monotone non-negative batch
   // ids; out-of-band unlearns use strictly decreasing negative keys;
   // Long.MinValue is the folded row's sentinel.
-
-  private val CmsBkHighWaterParam = "cmsBkHighWater"
-  private val CmsBkNegLowWaterParam = "cmsBkNegLowWater"
-  private val CmsFoldedBk = Long.MinValue
 
   private def cmsParams(grpCol: String, itemCol: String)
       : Map[String, String] =
@@ -2754,15 +2299,10 @@ object IndexStore {
   def buildCmsIndex(items: DataFrame, grpCol: String, itemCol: String,
       table: String, path: String, batchKey: Long = 0L,
       nBuckets: Int = 4): Unit = {
-    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
-    val spark = items.sparkSession
-    bucketRouted(cmsRegs(items, grpCol, itemCol, batchKey), "idx", nBuckets)
-      .write.bucketBy(nBuckets, "idx")
-      .option("path", s"$path/${table}_cregs").mode("overwrite")
-      .saveAsTable(s"${table}_cregs")
-    setParams(spark, s"${table}_cregs",
-      cmsParams(grpCol, itemCol) +
-        (CmsBkHighWaterParam -> batchKey.toString))
+    val mark = buildWaterMark("cms", batchKey)
+    writeBucketed(cmsRegs(items, grpCol, itemCol, batchKey),
+      s"${table}_cregs", path, "idx", nBuckets,
+      cmsParams(grpCol, itemCol) ++ mark)
   }
 
   /** Replay-idempotent append of a delta corpus's registers. Returns
@@ -2773,20 +2313,10 @@ object IndexStore {
     * cancels them. */
   def appendCmsIndex(delta: DataFrame, grpCol: String, itemCol: String,
       table: String, batchKey: Long): Boolean = {
-    require(batchKey >= 0 && batchKey != CmsFoldedBk,
-      s"append batchKey must be in-band (>= 0), got $batchKey")
-    val spark = delta.sparkSession
-    val cregs = s"${table}_cregs"
-    requireParams(spark, cregs, cmsParams(grpCol, itemCol), "append")
-    if (batchKey <= lmWaterMark(spark, cregs, CmsBkHighWaterParam, -1L))
-      false
-    else {
-      val nb = numBucketsOf(spark, cregs)
-      bucketRouted(cmsRegs(delta, grpCol, itemCol, batchKey), "idx", nb)
-        .write.bucketBy(nb, "idx").mode("append").saveAsTable(cregs)
-      noteAppend(spark, cregs)
-      true
-    }
+    requireParams(delta.sparkSession, s"${table}_cregs",
+      cmsParams(grpCol, itemCol), "append")
+    keyedBatch(delta.sparkSession, "cms", table, batchKey, "append")(
+      cmsRegs(delta, grpCol, itemCol, batchKey))
   }
 
   /** Replay-idempotent exact unlearning: the slice's registers negated
@@ -2794,21 +2324,10 @@ object IndexStore {
     * (first unlearn -1, then -2, …). Returns whether applied. */
   def unlearnFromCmsIndex(slice: DataFrame, grpCol: String,
       itemCol: String, table: String, batchKey: Long): Boolean = {
-    require(batchKey < 0 && batchKey != CmsFoldedBk,
-      s"unlearn batchKey must be negative (out-of-band), got $batchKey")
-    val spark = slice.sparkSession
-    val cregs = s"${table}_cregs"
-    requireParams(spark, cregs, cmsParams(grpCol, itemCol), "unlearn")
-    val low = lmWaterMark(spark, cregs, CmsBkNegLowWaterParam, 0L)
-    if (batchKey >= low) false
-    else {
-      val nb = numBucketsOf(spark, cregs)
-      bucketRouted(cmsRegs(slice, grpCol, itemCol, batchKey)
-          .withColumn("c", -col("c")), "idx", nb)
-        .write.bucketBy(nb, "idx").mode("append").saveAsTable(cregs)
-      noteAppend(spark, cregs)
-      true
-    }
+    requireParams(slice.sparkSession, s"${table}_cregs",
+      cmsParams(grpCol, itemCol), "unlearn")
+    keyedBatch(slice.sparkSession, "cms", table, batchKey, "unlearn")(
+      cmsRegs(slice, grpCol, itemCol, batchKey).withColumn("c", -col("c")))
   }
 
   /** Folded per-group registers from the store: (grp, row_j, idx, bk)
@@ -2837,38 +2356,6 @@ object IndexStore {
       groupCols = Seq("grp"))
   }
 
-  /** Compacts the sketch table, keyed-LM discipline: water marks move
-    * FIRST (a crash between the marks and the swap leaves un-folded
-    * rows in place, where replay duplicates are still cancelled
-    * row-wise), then the fold dedups row identities, sums, drops
-    * cancelled registers, and stamps survivors with the fold
-    * sentinel. */
-  def compactCmsIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val cregs = s"${table}_cregs"
-    val marks = spark.table(cregs).where(col("bk") =!= CmsFoldedBk)
-      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi"),
-        min(when(col("bk") < 0, col("bk"))).as("lo")).head()
-    if (!marks.isNullAt(0))
-      setLmWaterMark(spark, cregs, CmsBkHighWaterParam,
-        math.max(marks.getLong(0),
-          lmWaterMark(spark, cregs, CmsBkHighWaterParam, -1L)))
-    if (!marks.isNullAt(1))
-      setLmWaterMark(spark, cregs, CmsBkNegLowWaterParam,
-        math.min(marks.getLong(1),
-          lmWaterMark(spark, cregs, CmsBkNegLowWaterParam, 0L)))
-    rewriteInPlace(spark, cregs, bucketColOf(spark, cregs),
-      s"$newPathBase/${cregs}_c", numBucketsOf(spark, cregs))(
-      _.dropDuplicates("grp", "row_j", "idx", "bk")
-        .groupBy("grp", "row_j", "idx").agg(sum(col("c")).as("c"))
-        .where(col("c") =!= 0L)
-        .withColumn("bk", lit(CmsFoldedBk)))
-  }
-
-  /** Vacuums the sketch table's retired directories. */
-  def vacuumCmsIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_cregs")
-
   // ---- quantile-histogram store --------------------------------------
   // The fifteenth persisted kind: [[Qhist]] log-bucketed histograms per
   // group (≤ ~976 rows each) — the store that makes every future
@@ -2877,10 +2364,6 @@ object IndexStore {
   // folds) under the same keyed-batch replay discipline as the
   // Count-Min kind — the crash-replay argument transfers verbatim,
   // (grp, bucket, bk) being the row identity.
-
-  private val QhBkHighWaterParam = "qhBkHighWater"
-  private val QhBkNegLowWaterParam = "qhBkNegLowWater"
-  private val QhFoldedBk = Long.MinValue
 
   private def qhParams(grpCol: String, valueCol: String)
       : Map[String, String] =
@@ -2898,54 +2381,28 @@ object IndexStore {
   def buildQhistIndex(df: DataFrame, grpCol: String, valueCol: String,
       table: String, path: String, batchKey: Long = 0L,
       nBuckets: Int = 4): Unit = {
-    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
-    val spark = df.sparkSession
-    bucketRouted(qhRegs(df, grpCol, valueCol, batchKey), "bucket", nBuckets)
-      .write.bucketBy(nBuckets, "bucket")
-      .option("path", s"$path/${table}_qregs").mode("overwrite")
-      .saveAsTable(s"${table}_qregs")
-    setParams(spark, s"${table}_qregs",
-      qhParams(grpCol, valueCol) +
-        (QhBkHighWaterParam -> batchKey.toString))
+    val mark = buildWaterMark("qh", batchKey)
+    writeBucketed(qhRegs(df, grpCol, valueCol, batchKey), s"${table}_qregs",
+      path, "bucket", nBuckets, qhParams(grpCol, valueCol) ++ mark)
   }
 
   /** Replay-idempotent append — the CMS kind's contract verbatim. */
   def appendQhistIndex(delta: DataFrame, grpCol: String, valueCol: String,
       table: String, batchKey: Long): Boolean = {
-    require(batchKey >= 0 && batchKey != QhFoldedBk,
-      s"append batchKey must be in-band (>= 0), got $batchKey")
-    val spark = delta.sparkSession
-    val qregs = s"${table}_qregs"
-    requireParams(spark, qregs, qhParams(grpCol, valueCol), "append")
-    if (batchKey <= lmWaterMark(spark, qregs, QhBkHighWaterParam, -1L))
-      false
-    else {
-      val nb = numBucketsOf(spark, qregs)
-      bucketRouted(qhRegs(delta, grpCol, valueCol, batchKey), "bucket", nb)
-        .write.bucketBy(nb, "bucket").mode("append").saveAsTable(qregs)
-      noteAppend(spark, qregs)
-      true
-    }
+    requireParams(delta.sparkSession, s"${table}_qregs",
+      qhParams(grpCol, valueCol), "append")
+    keyedBatch(delta.sparkSession, "qh", table, batchKey, "append")(
+      qhRegs(delta, grpCol, valueCol, batchKey))
   }
 
   /** Replay-idempotent exact unlearning under a strictly-negative key. */
   def unlearnFromQhistIndex(df: DataFrame, grpCol: String,
       valueCol: String, table: String, batchKey: Long): Boolean = {
-    require(batchKey < 0 && batchKey != QhFoldedBk,
-      s"unlearn batchKey must be negative (out-of-band), got $batchKey")
-    val spark = df.sparkSession
-    val qregs = s"${table}_qregs"
-    requireParams(spark, qregs, qhParams(grpCol, valueCol), "unlearn")
-    val low = lmWaterMark(spark, qregs, QhBkNegLowWaterParam, 0L)
-    if (batchKey >= low) false
-    else {
-      val nb = numBucketsOf(spark, qregs)
-      bucketRouted(qhRegs(df, grpCol, valueCol, batchKey)
-          .withColumn("cnt", -col("cnt")), "bucket", nb)
-        .write.bucketBy(nb, "bucket").mode("append").saveAsTable(qregs)
-      noteAppend(spark, qregs)
-      true
-    }
+    requireParams(df.sparkSession, s"${table}_qregs",
+      qhParams(grpCol, valueCol), "unlearn")
+    keyedBatch(df.sparkSession, "qh", table, batchKey, "unlearn")(
+      qhRegs(df, grpCol, valueCol, batchKey)
+        .withColumn("cnt", -col("cnt")))
   }
 
   /** Folded per-group histograms from the store. */
@@ -2964,33 +2421,6 @@ object IndexStore {
       ps: Seq[Int]): DataFrame =
     Qhist.cutoffs(qhistRegistersFromIndex(spark, table), ps, Seq("grp"))
 
-  /** Compacts under the CMS water-mark discipline. */
-  def compactQhistIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val qregs = s"${table}_qregs"
-    val marks = spark.table(qregs).where(col("bk") =!= QhFoldedBk)
-      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi"),
-        min(when(col("bk") < 0, col("bk"))).as("lo")).head()
-    if (!marks.isNullAt(0))
-      setLmWaterMark(spark, qregs, QhBkHighWaterParam,
-        math.max(marks.getLong(0),
-          lmWaterMark(spark, qregs, QhBkHighWaterParam, -1L)))
-    if (!marks.isNullAt(1))
-      setLmWaterMark(spark, qregs, QhBkNegLowWaterParam,
-        math.min(marks.getLong(1),
-          lmWaterMark(spark, qregs, QhBkNegLowWaterParam, 0L)))
-    rewriteInPlace(spark, qregs, bucketColOf(spark, qregs),
-      s"$newPathBase/${qregs}_c", numBucketsOf(spark, qregs))(
-      _.dropDuplicates("grp", "bucket", "bk")
-        .groupBy("grp", "bucket").agg(sum(col("cnt")).as("cnt"))
-        .where(col("cnt") =!= 0L)
-        .withColumn("bk", lit(QhFoldedBk)))
-  }
-
-  /** Vacuums the histogram table's retired directories. */
-  def vacuumQhistIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_qregs")
-
   // ---- source-authority shingle table --------------------------------
   // The sixteenth persisted kind: `(source, ph, nd, bk)` — per-source
   // distinct-DOCUMENT counts of word-8-gram fingerprints, the
@@ -3008,10 +2438,6 @@ object IndexStore {
   // below the high-water mark are skipped, unlearns use strictly
   // decreasing negative keys, compaction folds to the sentinel.
   // Bucketed by ph so the edge derivation's self-join reads co-located.
-
-  private val AuthBkHighWaterParam = "authBkHighWater"
-  private val AuthBkNegLowWaterParam = "authBkNegLowWater"
-  private val AuthFoldedBk = Long.MinValue
 
   private def authParams(srcCol: String, idCol: String,
       k: Int): Map[String, String] =
@@ -3094,8 +2520,7 @@ object IndexStore {
   def buildAuthorityIndex(docs: DataFrame, srcCol: String, idCol: String,
       textCol: String, table: String, path: String, k: Int = 8,
       batchKey: Long = 0L, nBuckets: Int = 4): Unit = {
-    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
-    val spark = docs.sparkSession
+    val mark = buildWaterMark("auth", batchKey)
     // pinned EAGER: the indexability guard's source-distinct collect and
     // the bucketed CTAS below both consume the counts — unpinned, the
     // corpus-sized shingle+md5 pass ran TWICE per build (measured: the
@@ -3104,14 +2529,9 @@ object IndexStore {
       authCounts(docs, srcCol, idCol, textCol, k, batchKey), eager = true)
     requireAuthSourcesIndexable(docs, counts, srcCol, k,
       s"buildAuthorityIndex($table)")
-    bucketRouted(counts, "ph", nBuckets)
-      .write.bucketBy(nBuckets, "ph")
-      .option("path", s"$path/${table}_aph").mode("overwrite")
-      .saveAsTable(s"${table}_aph")
+    writeBucketed(counts, s"${table}_aph", path, "ph", nBuckets,
+      authParams(srcCol, idCol, k) ++ mark)
     Ops.freeLogicalRddBlocks(counts)
-    setParams(spark, s"${table}_aph",
-      authParams(srcCol, idCol, k) +
-        (AuthBkHighWaterParam -> batchKey.toString))
   }
 
   private def authK(spark: SparkSession, table: String, srcCol: String,
@@ -3127,30 +2547,22 @@ object IndexStore {
     * mark — a replay of an already-folded batch). */
   def appendAuthorityIndex(delta: DataFrame, srcCol: String, idCol: String,
       textCol: String, table: String, batchKey: Long): Boolean = {
-    require(batchKey >= 0 && batchKey != AuthFoldedBk,
-      s"append batchKey must be in-band (>= 0), got $batchKey")
     val spark = delta.sparkSession
-    val aph = s"${table}_aph"
     val k = authK(spark, table, srcCol, idCol, "append")
-    if (batchKey <= lmWaterMark(spark, aph, AuthBkHighWaterParam, -1L))
-      false
-    else {
-      val nb = numBucketsOf(spark, aph)
-      // pinned eager: guard collect + append write both consume the
-      // batch counts (the buildAuthorityIndex doubled-pass fix)
-      val counts = Ops.checkpointKeepPartitioning(
-        authCounts(delta, srcCol, idCol, textCol, k, batchKey),
-        eager = true)
+    // pinned eager: guard collect + append write both consume the
+    // batch counts (the buildAuthorityIndex doubled-pass fix); built
+    // only when the batch applies
+    lazy val counts = Ops.checkpointKeepPartitioning(
+      authCounts(delta, srcCol, idCol, textCol, k, batchKey), eager = true)
+    val applied = keyedBatch(spark, "auth", table, batchKey, "append") {
       requireAuthSourcesIndexable(delta, counts, srcCol, k,
         s"appendAuthorityIndex($table)",
         liveFor = Some(srcs =>
           authorityShinglesFromIndex(spark, table, forSources = Some(srcs))))
-      bucketRouted(counts, "ph", nb)
-        .write.bucketBy(nb, "ph").mode("append").saveAsTable(aph)
-      Ops.freeLogicalRddBlocks(counts)
-      noteAppend(spark, aph)
-      true
+      counts
     }
+    if (applied) Ops.freeLogicalRddBlocks(counts)
+    applied
   }
 
   /** Replay-idempotent exact unlearning: the slice's counts negated
@@ -3158,22 +2570,10 @@ object IndexStore {
   def unlearnFromAuthorityIndex(slice: DataFrame, srcCol: String,
       idCol: String, textCol: String, table: String,
       batchKey: Long): Boolean = {
-    require(batchKey < 0 && batchKey != AuthFoldedBk,
-      s"unlearn batchKey must be negative (out-of-band), got $batchKey")
-    val spark = slice.sparkSession
-    val aph = s"${table}_aph"
-    val k = authK(spark, table, srcCol, idCol, "unlearn")
-    val low = lmWaterMark(spark, aph, AuthBkNegLowWaterParam, 0L)
-    if (batchKey >= low) false
-    else {
-      val nb = numBucketsOf(spark, aph)
-      bucketRouted(
-          authCounts(slice, srcCol, idCol, textCol, k, batchKey)
-            .withColumn("nd", -col("nd")), "ph", nb)
-        .write.bucketBy(nb, "ph").mode("append").saveAsTable(aph)
-      noteAppend(spark, aph)
-      true
-    }
+    val k = authK(slice.sparkSession, table, srcCol, idCol, "unlearn")
+    keyedBatch(slice.sparkSession, "auth", table, batchKey, "unlearn")(
+      authCounts(slice, srcCol, idCol, textCol, k, batchKey)
+        .withColumn("nd", -col("nd")))
   }
 
   /** The folded live (source, ph) membership: row-identity dedup (which
@@ -3232,34 +2632,6 @@ object IndexStore {
     ranks
   }
 
-  /** Compacts under the CMS water-mark discipline (marks move FIRST,
-    * then the atomic fold-and-swap). */
-  def compactAuthorityIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val aph = s"${table}_aph"
-    val marks = spark.table(aph).where(col("bk") =!= AuthFoldedBk)
-      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi"),
-        min(when(col("bk") < 0, col("bk"))).as("lo")).head()
-    if (!marks.isNullAt(0))
-      setLmWaterMark(spark, aph, AuthBkHighWaterParam,
-        math.max(marks.getLong(0),
-          lmWaterMark(spark, aph, AuthBkHighWaterParam, -1L)))
-    if (!marks.isNullAt(1))
-      setLmWaterMark(spark, aph, AuthBkNegLowWaterParam,
-        math.min(marks.getLong(1),
-          lmWaterMark(spark, aph, AuthBkNegLowWaterParam, 0L)))
-    rewriteInPlace(spark, aph, bucketColOf(spark, aph),
-      s"$newPathBase/${aph}_c", numBucketsOf(spark, aph))(
-      _.dropDuplicates("source", "ph", "bk")
-        .groupBy("source", "ph").agg(sum(col("nd")).as("nd"))
-        .where(col("nd") =!= 0L)
-        .withColumn("bk", lit(AuthFoldedBk)))
-  }
-
-  /** Vacuums the authority table's retired directories. */
-  def vacuumAuthorityIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_aph")
-
   // ---- append accounting + auto-compaction --------------------------
   // Every bucketed append leaves one new file set per bucket, so a
   // long-lived index's scan cost grows linearly with appends until
@@ -3307,59 +2679,229 @@ object IndexStore {
       s"'$ParamPrefix$AppendsTotalParam'='$total')")
   }
 
-  /** Triggers `compact` when `primaryTable`'s append counter has
-    * reached `every` (0 disables). The target base directory embeds the
-    * monotone total-append count and sits beside the index's ORIGINAL
-    * location — auto_g* components of the current location are stripped
-    * first, so repeated auto-compactions of a long-lived index land as
-    * siblings instead of nesting deeper each time. Returns whether a
-    * compaction ran. */
-  private def maybeAutoCompact(spark: SparkSession, primaryTable: String,
-      every: Int)(compact: String => Unit): Boolean = {
-    if (every > 0 && appendsSinceCompact(spark, primaryTable) >= every) {
-      val total = getParams(spark, primaryTable)
+  /** The counter-driven policy for callers that append OUTSIDE the
+    * batch ingest loops — a streaming foreachBatch sink, a custom
+    * maintenance job: runs [[compact]] on `table` (base name, no suffix)
+    * once its primary table's append counter has reached `every`
+    * (0 disables). `kind` is any registered kind name (see [[compact]]).
+    * The target base directory embeds the monotone total-append count
+    * and sits beside the index's ORIGINAL location — auto_g* components
+    * of the current location are stripped first, so repeated
+    * auto-compactions of a long-lived index land as siblings instead of
+    * nesting deeper each time. Returns whether a compaction ran. */
+  def autoCompact(spark: SparkSession, kind: String, table: String,
+      every: Int = DefaultAutoCompactAppends): Boolean = {
+    val primary = tablesOf(kind, table).head
+    if (every > 0 && appendsSinceCompact(spark, primary) >= every) {
+      val total = getParams(spark, primary)
         .get(AppendsTotalParam).getOrElse("0")
       var base = new org.apache.hadoop.fs.Path(
-        tableMeta(spark, primaryTable).location).getParent
+        tableMeta(spark, primary).location).getParent
       while (base.getParent != null && base.getName.matches("auto_g\\d+"))
         base = base.getParent
-      compact(s"$base/auto_g$total")
+      compact(spark, kind, table, s"$base/auto_g$total")
       true
     } else false
   }
 
-  /** The same counter-driven policy for callers that append OUTSIDE the
-    * batch ingest loops — a streaming foreachBatch sink, a custom
-    * maintenance job: compacts `table` (base name, no suffix) once its
-    * primary table's append counter has reached `every` (0 disables).
-    * `kind` is one of exact / minhash / simhash / srp / winnow / ivf / lm.
-    * Returns whether a compaction ran. */
-  def autoCompact(spark: SparkSession, kind: String, table: String,
-      every: Int = DefaultAutoCompactAppends): Boolean = {
-    val (primary, compact): (String, String => Unit) = kind match {
-      case "exact"   => (s"${table}_fps",    compactExactIndex(spark, table, _))
-      case "minhash" => (s"${table}_bands",  compactMinhashIndex(spark, table, _))
-      case "simhash" => (s"${table}_chunks", compactSimhashIndex(spark, table, _))
-      case "srp"     => (s"${table}_bands",  compactSrpIndex(spark, table, _))
-      case "winnow"  => (s"${table}_wins",   compactWinnowIndex(spark, table, _))
-      case "ivf"     => (s"${table}_lists",  compactIvfIndex(spark, table, _))
-      case "lm"      => (s"${table}_counts", compactLmIndex(spark, table, _))
-      case "lmk"     => (s"${table}_counts", compactLmIndexKeyed(spark, table, _))
-      case "dsir"    => (s"${table}_counts", compactDsirIndex(spark, table, _))
-      case "doremi"  => (s"${table}_dmc",    compactDoremiIndex(spark, table, _))
-      case "doremik" => (s"${table}_dmc",    compactDoremiIndexKeyed(spark, table, _))
-      case "span"    => (s"${table}_sdf",    compactSpanIndex(spark, table, _))
-      case "pq"      => (s"${table}_codes",  compactPqIndex(spark, table, _))
-      case "hll"     => (s"${table}_hregs",  compactHllIndex(spark, table, _))
-      case "cms"     => (s"${table}_cregs",  compactCmsIndex(spark, table, _))
-      case "lms"     => (s"${table}_slices", compactLmSliceIndex(spark, table, _))
-      case "qh"      => (s"${table}_qregs",  compactQhistIndex(spark, table, _))
-      case "auth"    => (s"${table}_aph",    compactAuthorityIndex(spark, table, _))
-      case other => throw new IllegalArgumentException(
-        s"unknown index kind '$other' " +
-          "(expected exact/minhash/simhash/srp/winnow/ivf/lm/lmk/lms/dsir/span/pq/hll/cms/qh/auth)")
+  // ---- kind registry + generic lifecycle -----------------------------
+  // One descriptor per persisted kind is the only place that knows the
+  // layout the lifecycle rewrites: the tables a kind owns (primary
+  // first — the table whose append counter drives auto-compaction and
+  // the health report), the fold its compaction applies — the merge
+  // operator of the kind's summary: identity for posting tables, sum
+  // for the additive count kinds, max for HLL registers — the water-mark
+  // params a batch-keyed kind raises before folding, and the id column
+  // erasure falls back to for an index that predates its params.
+  // Non-bucketed side tables (IVF centroids, PQ codebooks, the bloom
+  // sidecar) are never rewritten in place and are not listed.
+
+  /** The high- and low-water mark params of a batch-keyed kind. */
+  private final case class Keyed(hiParam: String, loParam: String)
+
+  private final case class Kind(name: String, suffixes: Seq[String],
+      fold: DataFrame => DataFrame, keyed: Option[Keyed] = None,
+      eraseIdCol: Option[String] = None) {
+    def tables(base: String): Seq[String] = suffixes.map(base + _)
+  }
+
+  /** The folded-row sentinel of every batch-keyed kind — never a legal
+    * caller key. */
+  private val FoldedBk = Long.MinValue
+
+  /** Additive fold: rows merge by summation per `keys`; `positive`
+    * kinds also drop negative totals (their serving ignores them), the
+    * others only exact cancellations. */
+  private def summed(keys: Seq[String], v: String, positive: Boolean)
+      (df: DataFrame): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(sum(col(v)).as(v))
+      .where(if (positive) col(v) > 0 else col(v) =!= 0L)
+
+  private def posting(name: String, eraseIdCol: String,
+      suffixes: String*): Kind =
+    Kind(name, suffixes, identity, eraseIdCol = Some(eraseIdCol))
+
+  private def additive(name: String, suffix: String, keys: Seq[String],
+      v: String, positive: Boolean): Kind =
+    Kind(name, Seq(suffix), summed(keys, v, positive))
+
+  /** Keyed fold: `keys` plus the batch key `bk` is a row's identity —
+    * dedup identities (cancelling pre-compaction replay duplicates),
+    * sum, stamp survivors with the sentinel. */
+  private def keyed(name: String, suffix: String, keys: Seq[String],
+      v: String, positive: Boolean, hiParam: String, loParam: String): Kind =
+    Kind(name, Seq(suffix), df =>
+      summed(keys, v, positive)(df.dropDuplicates(keys :+ "bk"))
+        .withColumn("bk", lit(FoldedBk)),
+      Some(Keyed(hiParam, loParam)))
+
+  private val Kinds: Seq[Kind] = Seq(
+    posting("exact", "doc_id", "_fps"),
+    posting("minhash", "doc_id", "_bands", "_shingles"),
+    posting("simhash", "doc_id", "_chunks"),
+    posting("winnow", "doc_id", "_wins"),
+    posting("srp", "vec_id", "_bands", "_vecs"),
+    posting("ivf", "vec_id", "_lists"),
+    posting("pq", "vec_id", "_codes"),
+    additive("lm", "_counts", Seq("bg"), "cb", positive = true),
+    keyed("lmk", "_counts", Seq("bg"), "cb", positive = true,
+      "lmBkHighWater", "lmBkNegLowWater"),
+    additive("lms", "_slices", Seq("grp", "bg"), "cb", positive = false),
+    additive("dsir", "_counts", Seq("bucket", "side"), "c", positive = true),
+    additive("doremi", "_dmc", Seq("source", "bg"), "cb", positive = true),
+    // shares the keyed LM's mark names; appends only, so no low mark
+    keyed("doremik", "_dmc", Seq("source", "bg"), "cb", positive = true,
+      "lmBkHighWater", "lmBkNegLowWater"),
+    additive("span", "_sdf", Seq("s"), "nd", positive = true),
+    Kind("hll", Seq("_hregs"), Hll.fold(_, Seq("grp"))),
+    keyed("cms", "_cregs", Seq("grp", "row_j", "idx"), "c",
+      positive = false, "cmsBkHighWater", "cmsBkNegLowWater"),
+    keyed("qh", "_qregs", Seq("grp", "bucket"), "cnt", positive = false,
+      "qhBkHighWater", "qhBkNegLowWater"),
+    keyed("auth", "_aph", Seq("source", "ph"), "nd", positive = false,
+      "authBkHighWater", "authBkNegLowWater"),
+    // refit-only: no appends, so compaction is a plain file rewrite
+    Kind("distill", Seq("_lw"), identity))
+
+  private val KindByName = Kinds.map(k => k.name -> k).toMap
+
+  private def kindOf(kind: String): Kind = KindByName.getOrElse(kind,
+    throw new IllegalArgumentException(s"unknown index kind '$kind' " +
+      s"(expected ${Kinds.map(_.name).mkString("/")})"))
+
+  /** The bucketed tables a `kind` index named `table` owns, primary
+    * first — what its lifecycle rewrites. */
+  def tablesOf(kind: String, table: String): Seq[String] =
+    kindOf(kind).tables(table)
+
+  /** Compacts every table of a `kind` index (base name `table`) into
+    * one file per bucket at `$newPathBase/<table>_c` — zero shuffle,
+    * catalog swap, build parameters carried over ([[rewriteInPlace]]) —
+    * through the kind's fold: posting tables keep their rows, the
+    * summary kinds fold duplicate and cancellation rows (their
+    * compaction changes row COUNT by design). A batch-keyed kind raises
+    * its water marks FIRST: a crash between the marks and the swap
+    * leaves the un-folded rows in place, where replay duplicates are
+    * still cancelled row-wise, and the moved marks merely skip batches
+    * that were genuinely applied. The retired directories stay until
+    * [[vacuum]]. `kind` is one of exact / minhash / simhash / winnow /
+    * srp / ivf / pq / lm / lmk / lms / dsir / doremi / doremik / span /
+    * hll / cms / qh / auth / distill. */
+  def compact(spark: SparkSession, kind: String, table: String,
+      newPathBase: String): Unit = {
+    val k = kindOf(kind)
+    k.keyed.foreach(raiseWaterMarks(spark, k.tables(table).head, _))
+    k.tables(table).foreach { t =>
+      val (bucketCol, nb) = bucketSpecOf(spark, t)
+      rewriteInPlace(spark, t, bucketCol, s"$newPathBase/${t}_c", nb)(k.fold)
     }
-    maybeAutoCompact(spark, primary, every)(compact)
+  }
+
+  /** Reclaims the retired directories of every table of a `kind`
+    * index ([[vacuumIndexTable]] per table) — callers never need the
+    * kind's table layout to avoid leaking one of them. */
+  def vacuum(spark: SparkSession, kind: String, table: String): Seq[String] =
+    tablesOf(kind, table).flatMap(vacuumIndexTable(spark, _))
+
+  /** Take-down: rewrites every table of a `kind` index without the rows
+    * whose id appears in `ids` ([[deleteFromTable]], into
+    * `$newPathBase/<table>_d`). The id column is the build-time `idCol`
+    * param, else the kind's default. Only per-document kinds erase;
+    * the summary kinds hold aggregates with no per-document provenance
+    * and unlearn (negated rows) instead. Side tables — IVF centroids,
+    * PQ codebooks — are aggregate positions and stay untouched. */
+  def deleteFrom(spark: SparkSession, kind: String, table: String,
+      ids: DataFrame, newPathBase: String): Unit = {
+    val k = kindOf(kind)
+    val fallbackIdCol = k.eraseIdCol.getOrElse(throw new IllegalArgumentException(
+      s"index kind '$kind' holds aggregate rows with no per-document " +
+        "provenance; unlearn the documents instead of deleting them"))
+    val idCol = getParams(spark, k.tables(table).head)
+      .getOrElse("idCol", fallbackIdCol)
+    k.tables(table).foreach { t =>
+      val (bucketCol, nb) = bucketSpecOf(spark, t)
+      deleteFromTable(spark, t, bucketCol, idCol, ids, s"$newPathBase/${t}_d",
+        nb)
+    }
+  }
+
+  private def waterMark(spark: SparkSession, table: String, param: String,
+      default: Long): Long =
+    getParams(spark, table).get(param).map(_.toLong).getOrElse(default)
+
+  /** One aggregate over the unfolded rows, then each mark moves only
+    * outward: the high mark up to the largest in-band key, the low mark
+    * down to the smallest out-of-band key. */
+  private def raiseWaterMarks(spark: SparkSession, table: String,
+      m: Keyed): Unit = {
+    val marks = spark.table(table).where(col("bk") =!= FoldedBk)
+      .agg(max(when(col("bk") >= 0, col("bk"))).as("hi"),
+        min(when(col("bk") < 0, col("bk"))).as("lo")).head()
+    def set(param: String, v: Long): Unit =
+      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+        s"('$ParamPrefix$param'='$v')")
+    if (!marks.isNullAt(0)) set(m.hiParam,
+      math.max(marks.getLong(0), waterMark(spark, table, m.hiParam, -1L)))
+    if (!marks.isNullAt(1)) set(m.loParam,
+      math.min(marks.getLong(1), waterMark(spark, table, m.loParam, 0L)))
+  }
+
+  /** The initial high-water mark a keyed build records: `batchKey`
+    * (the building stream's first batch id), so a crash-replay of the
+    * building batch — which finds the table existing and falls through
+    * to the append path — is skipped rather than re-counted. */
+  private def buildWaterMark(kind: String, batchKey: Long)
+      : Map[String, String] = {
+    require(batchKey >= 0, s"build batchKey must be in-band, got $batchKey")
+    Map(kindOf(kind).keyed.get.hiParam -> batchKey.toString)
+  }
+
+  /** The replay guard every batch-keyed append and unlearn goes
+    * through (`op` names which). Key discipline: in-band appends use the
+    * stream's monotone non-negative batch ids and are skipped at or
+    * below the high-water mark — a replay of a batch some compaction
+    * already folded; out-of-band unlearns use strictly DECREASING
+    * negative keys (they have no natural sequence, so they get their own
+    * low-water mark, starting at 0: the first unlearn uses -1, the next
+    * -2, …) and are skipped at or above it; [[FoldedBk]] is never a
+    * legal key. `rows` (already stamped with the key) is built and
+    * appended only when the batch applies. Pre-compaction replays DO
+    * write duplicate rows; the row-identity dedup on read and in the
+    * fold cancels them. Returns whether the batch was applied. */
+  private def keyedBatch(spark: SparkSession, kind: String, table: String,
+      batchKey: Long, op: String)(rows: => DataFrame): Boolean = {
+    val unlearn = op == "unlearn"
+    require(batchKey != FoldedBk && (batchKey < 0) == unlearn,
+      if (unlearn) s"unlearn batchKey must be negative (out-of-band), got $batchKey"
+      else s"append batchKey must be in-band (>= 0), got $batchKey")
+    val k = kindOf(kind)
+    val t = k.tables(table).head
+    val m = k.keyed.get
+    val applies =
+      if (unlearn) batchKey < waterMark(spark, t, m.loParam, 0L)
+      else batchKey > waterMark(spark, t, m.hiParam, -1L)
+    if (applies) appendBucketed(rows, t)
+    applies
   }
 
   /** One-table OPS dashboard over a fleet of persisted indexes: per
@@ -3375,20 +2917,12 @@ object IndexStore {
     * FLEET is bounded (tens), never the data. */
   def healthReport(spark: SparkSession,
       indexes: Seq[(String, String)]): DataFrame = {
-    val suffix = Map("exact" -> "_fps", "minhash" -> "_bands",
-      "simhash" -> "_chunks", "srp" -> "_bands", "winnow" -> "_wins",
-      "ivf" -> "_lists", "lm" -> "_counts", "lmk" -> "_counts",
-      "dsir" -> "_counts", "doremi" -> "_dmc", "doremik" -> "_dmc",
-      "span" -> "_sdf", "pq" -> "_codes", "hll" -> "_hregs",
-      "cms" -> "_cregs", "lms" -> "_slices", "qh" -> "_qregs",
-      "distill" -> "_lw", "auth" -> "_aph")
     val rows = indexes.map { case (kind, table) =>
-      val primary = table + suffix.getOrElse(kind,
-        throw new IllegalArgumentException(s"unknown index kind '$kind'"))
+      val primary = tablesOf(kind, table).head
       spark.catalog.refreshTable(primary)
       val df = spark.table(primary)
       (kind, table, primary, df.count(), df.inputFiles.length.toLong,
-        numBucketsOf(spark, primary).toLong,
+        bucketSpecOf(spark, primary)._2.toLong,
         appendsSinceCompact(spark, primary).toLong,
         getParams(spark, primary).get(AppendsTotalParam)
           .map(_.toLong).getOrElse(0L),
@@ -3435,18 +2969,6 @@ object IndexStore {
     reclaimed
   }
 
-  /** Vacuums every table of a MinHash index — callers should not need
-    * to know the two-table (_bands/_shingles) layout to avoid leaking
-    * one of them. */
-  def vacuumMinhashIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_bands") ++
-      vacuumIndexTable(spark, s"${table}_shingles")
-
-  /** Vacuums the IVF index's inverted-list table (centroids are never
-    * rewritten in place, so they retire nothing). */
-  def vacuumIvfIndex(spark: SparkSession, table: String): Seq[String] =
-    vacuumIndexTable(spark, s"${table}_lists")
-
   /** Deletion: rewrites an index table WITHOUT the rows whose `idCol`
     * appears in `ids` — the take-down/right-to-erasure path that
     * completes the index lifecycle (build / append / compact / delete /
@@ -3459,20 +2981,6 @@ object IndexStore {
       nBuckets: Int = 8): Unit =
     rewriteInPlace(spark, table, bucketCol, newPath, nBuckets)(
       _.join(broadcast(ids.select(col(idCol))), Seq(idCol), "left_anti"))
-
-  /** Deletes documents from a MinHash index (band + shingle tables).
-    * Bucket counts come from the catalog so the rewrite preserves the
-    * existing layout. */
-  def deleteFromMinhashIndex(spark: SparkSession, table: String,
-      idCol: String, ids: DataFrame, newPathBase: String): Unit = {
-    deleteFromTable(spark, s"${table}_bands",
-      bucketColOf(spark, s"${table}_bands"), idCol, ids,
-      s"$newPathBase/${table}_bands_d", numBucketsOf(spark, s"${table}_bands"))
-    deleteFromTable(spark, s"${table}_shingles",
-      bucketColOf(spark, s"${table}_shingles"), idCol, ids,
-      s"$newPathBase/${table}_shingles_d",
-      numBucketsOf(spark, s"${table}_shingles"))
-  }
 
   /** Builds the IVF index: inverted lists (corpus rows + cluster_id)
     * bucketed by cluster_id, plus the small centroid table. */
@@ -3488,14 +2996,10 @@ object IndexStore {
     val dim = centroids.select(size(col("centroid"))).head().getInt(0)
     val lists = corpus
       .join(IvfIndex.assign(corpus, centroids, idCol, vecCol), idCol)
-    bucketRouted(lists, "cluster_id", nBuckets)
-      .write.bucketBy(nBuckets, "cluster_id")
-      .option("path", s"$path/${table}_lists").mode("overwrite")
-      .saveAsTable(s"${table}_lists")
     // "quantized" recorded explicitly (the SRP convention) so an fp
     // probe against a quantized index — and vice versa — fails loud at
     // validation instead of mid-plan on a missing column
-    setParams(corpus.sparkSession, s"${table}_lists",
+    writeBucketed(lists, s"${table}_lists", path, "cluster_id", nBuckets,
       Map("idCol" -> idCol, "vecCol" -> vecCol, "dim" -> dim.toString,
         "quantized" -> "none"))
     centroids.write
@@ -3524,11 +3028,7 @@ object IndexStore {
           .cast("array<tinyint>").as("codes"),
         coalesce(col("__scale"), lit(0.0)).as("scale"),
         col("cluster_id"))
-    bucketRouted(lists, "cluster_id", nBuckets)
-      .write.bucketBy(nBuckets, "cluster_id")
-      .option("path", s"$path/${table}_lists").mode("overwrite")
-      .saveAsTable(s"${table}_lists")
-    setParams(corpus.sparkSession, s"${table}_lists",
+    writeBucketed(lists, s"${table}_lists", path, "cluster_id", nBuckets,
       Map("idCol" -> idCol, "vecCol" -> vecCol, "dim" -> dim.toString,
         "quantized" -> "int8"))
     centroids.write
@@ -3571,13 +3071,9 @@ object IndexStore {
           lit(s"append to ${table}_lists: vectors must have dimension $d")),
         lit(true))))
     val centroids = spark.table(s"${table}_centroids")
-    val nb = numBucketsOf(spark, s"${table}_lists")
-    bucketRouted(
-        guarded.join(IvfIndex.assign(guarded, centroids, idCol, vecCol), idCol),
-        "cluster_id", nb)
-      .write.bucketBy(nb, "cluster_id")
-      .mode("append").saveAsTable(s"${table}_lists")
-    noteAppend(spark, s"${table}_lists")
+    appendBucketed(
+      guarded.join(IvfIndex.assign(guarded, centroids, idCol, vecCol), idCol),
+      s"${table}_lists")
   }
 
   /** IVF top-k against a persisted index: zero index-build cost, and the
@@ -3593,53 +3089,14 @@ object IndexStore {
       spark.table(s"${table}_centroids"), k, nprobe, idCol, vecCol)
   }
 
-  /** Number of buckets straight from the catalog — compaction and
-    * erasure must preserve the EXISTING layout, not trust a caller-
-    * supplied count that might silently re-bucket the table. */
-  private def numBucketsOf(spark: SparkSession, table: String): Int =
-    tableMeta(spark, table).bucketSpec.getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — not an index table")).numBuckets
-
-  /** Bucket column straight from the catalog too — always present and
-    * authoritative even for a pre-metadata index, unlike a params lookup
-    * with a guessed default. */
-  private def bucketColOf(spark: SparkSession, table: String): String =
-    tableMeta(spark, table).bucketSpec.getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — not an index table")).bucketColumnNames.head
-
-  /** Compacts both MinHash index tables (one file per bucket, zero
-    * shuffle, catalog swap); bucket columns and counts come from the
-    * catalog, build parameters ride along. */
-  def compactMinhashIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val bands = s"${table}_bands"
-    val shingles = s"${table}_shingles"
-    compactTable(spark, bands, bucketColOf(spark, bands),
-      s"$newPathBase/${bands}_c", numBucketsOf(spark, bands))
-    compactTable(spark, shingles, bucketColOf(spark, shingles),
-      s"$newPathBase/${shingles}_c", numBucketsOf(spark, shingles))
-  }
-
-  /** Compacts the IVF inverted-list table (the centroid table is k rows —
-    * nothing to compact). */
-  def compactIvfIndex(spark: SparkSession, table: String,
-      newPathBase: String): Unit = {
-    val lists = s"${table}_lists"
-    compactTable(spark, lists, bucketColOf(spark, lists),
-      s"$newPathBase/${lists}_c", numBucketsOf(spark, lists))
-  }
-
-  /** Deletes vectors from an IVF index — the take-down path for the ANN
-    * surface, mirroring [[deleteFromMinhashIndex]]: the inverted-list
-    * table is rewritten without the ids (broadcast anti join over the
-    * bucketed scan, zero shuffle, catalog swap). Centroids are untouched:
-    * they are k aggregate positions, not per-document data — standard
-    * IVF practice is to retrain only on drift. */
-  def deleteFromIvfIndex(spark: SparkSession, table: String,
-      ids: DataFrame, newPathBase: String): Unit = {
-    val lists = s"${table}_lists"
-    val idCol = getParams(spark, lists).getOrElse("idCol", "vec_id")
-    deleteFromTable(spark, lists, bucketColOf(spark, lists), idCol, ids,
-      s"$newPathBase/${lists}_d", numBucketsOf(spark, lists))
+  /** (bucket column, bucket count) straight from the catalog — appends,
+    * compaction and erasure must preserve the EXISTING layout, not trust
+    * a caller-supplied spec that might silently re-bucket the table;
+    * authoritative even for a pre-metadata index. */
+  private def bucketSpecOf(spark: SparkSession, table: String): (String, Int) = {
+    val spec = tableMeta(spark, table).bucketSpec.getOrElse(
+      throw new IllegalStateException(
+        s"$table is not bucketed — not an index table"))
+    (spec.bucketColumnNames.head, spec.numBuckets)
   }
 }

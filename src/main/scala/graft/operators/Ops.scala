@@ -645,11 +645,13 @@ object Ops {
     * blocks has materialized: typically the checkpointed frame fed an
     * eager loop (pageRank iterations) or a bounded collect, and what
     * the caller returns references later checkpoints or driver-local
-    * rows, never these blocks. */
-  def freeLogicalRddBlocks(df: DataFrame): Unit =
-    df.queryExecution.optimizedPlan.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ =>
+    * rows, never these blocks. Leaves that `keep`'s plans also read
+    * (an input the caller still consumes) stay pinned. */
+  def freeLogicalRddBlocks(df: DataFrame, keep: DataFrame*): Unit = {
+    def rdds(d: DataFrame) = d.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
+    val kept = keep.flatMap(rdds).map(_.id).toSet
+    rdds(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
+  }
 }

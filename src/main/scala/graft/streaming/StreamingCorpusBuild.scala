@@ -48,9 +48,11 @@ object StreamingCorpusBuild {
     * stance: corpus-relative statistics come from a batch-side fit,
     * never from the unbounded stream). `ratios` is the eagerly-pinned
     * bounded bucket table; production reads this from the persisted
-    * DSIR index ([[IndexStore.buildDsirIndex]]) instead. */
+    * DSIR index ([[IndexStore.buildDsirIndex]]) instead. `indexTables`
+    * are the index tables it was hydrated from (none for a batch-side
+    * fit). */
   final case class PinnedDsir(ratios: DataFrame, r0Milli: Long,
-      hexChars: Int, targetSource: String)
+      hexChars: Int, targetSource: String, indexTables: Seq[String])
 
   /** The reference corpus's POST-DECON survivors split into (target
     * source, rest) — the two corpora every DSIR form (ad-hoc fit or
@@ -93,7 +95,7 @@ object StreamingCorpusBuild {
     val model = Dsir.fitBucketed(
       Dsir.bucketedFeatures(target, hexChars = 2), rawFeats, 2)
     PinnedDsir(model.ratios.localCheckpoint(),
-      model.unseen.head().getLong(0), 2, targetSource)
+      model.unseen.head().getLong(0), 2, targetSource, Nil)
   }
 
   /** The PRODUCTION hydration path: the pinned model read back from
@@ -108,7 +110,8 @@ object StreamingCorpusBuild {
       targetSource: String): PinnedDsir = {
     val model = IndexStore.dsirModelFromIndex(spark, table)
     PinnedDsir(model.ratios.localCheckpoint(),
-      model.unseen.head().getLong(0), model.hexChars, targetSource)
+      model.unseen.head().getLong(0), model.hexChars, targetSource,
+      IndexStore.tablesOf("dsir", table))
   }
 
   /** Stages `corpus` as doc_id-range files, drains after each, returns
@@ -139,9 +142,20 @@ object StreamingCorpusBuild {
     // the stream scaffolding below (dir cleanup, empty pre-seed CTAS,
     // eval pin, the first staging write) — so they compute while the
     // scaffolding runs instead of serially before it. Both resolve
-    // exactly once; the first stream start blocks on them.
+    // exactly once; the first stream start blocks on them. A hydration
+    // that builds its own index (sr20's DSIR table) runs its DDL while
+    // the scaffolding below drops and rebuilds this stream's exact
+    // index, so the two table sets must be disjoint — checked when the
+    // hydration resolves, before the first micro-batch runs.
     val budgetsThunk = Ops.deferred(budgets.localCheckpoint())
-    val dsirThunk = Ops.deferred(dsir)
+    val ownTables = IndexStore.tablesOf("exact", table)
+    val dsirThunk = Ops.deferred(dsir.map { p =>
+      val shared = p.indexTables.intersect(ownTables)
+      require(shared.isEmpty, s"the DSIR hydration's index tables " +
+        s"${shared.mkString(", ")} are also this stream's exact index " +
+        "tables; their DDL would race the stream scaffolding")
+      p
+    })
     val srcDir = s"$workDir/src"
     val sinkDir = s"$workDir/sink"
     Seq(srcDir, sinkDir, s"$workDir/ckpt").foreach(d =>

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, IndexStore}
+import graft.operators.{Dedup, IndexStore, Ops}
 
 /** Continuous dedup-ingest — the streaming form of the persisted
   * indexes' incremental-maintenance path: document micro-batches stream
@@ -424,25 +424,26 @@ object StreamingIndexIngest {
           val (accepted, decisions) = IndexStore.dedupIngestGateCheck(
             bs, batch, "doc_id", "text", exactTable, winnowTable,
             minhashTable, window = 40, guarantee = 10)
-          val acceptedP = accepted.localCheckpoint()
+          // `accepted` is already pinned pre-append (the check's last
+          // stage), so it feeds the sink and the appends directly
           decisions
-            .unionByName(acceptedP.select(col("doc_id"),
+            .unionByName(accepted.select(col("doc_id"),
               lit("accepted").as("gate")))
             .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-          val kfps = acceptedP.select(col("doc_id").as("query_id"),
+          val kfps = accepted.select(col("doc_id").as("query_id"),
             IndexStore.exactFingerprint(col("text")).as("fp"))
           val alreadyIndexed = bs.table(s"${exactTable}_fps")
             .select(col("doc_id").as("__ix_id"), col("fp"))
             .join(kfps, "fp")
             .where(col("__ix_id") === col("query_id"))
             .select(col("query_id").as("doc_id"))
-          val toAppend = acceptedP
+          val toAppend = accepted
             .join(alreadyIndexed, Seq("doc_id"), "left_anti")
             .localCheckpoint() // three consumers below
           // winnow+minhash overlap (independent tables, one pinned
           // source — Ops.concurrently); exact stays LAST alone, because
           // "in the exact index" must keep meaning ALL kinds completed
-          graft.operators.Ops.concurrently(
+          Ops.concurrently(
             () => IndexStore.appendWinnowIndex(toAppend, "doc_id", "text",
               winnowTable, window = 40, guarantee = 10),
             () => IndexStore.appendMinhashIndex(toAppend, "doc_id", "text",
@@ -456,6 +457,11 @@ object StreamingIndexIngest {
           IndexStore.autoCompact(bs, "exact", exactTable,
             autoCompactAppends)
           BatchManifest.commit(sinkDir, batchId)
+          // every stage's accepted set (all reachable through
+          // `decisions`) and the append source are consumed: free their
+          // blocks now instead of leaving them to the context cleaner,
+          // which a long-lived stream may not run for many drains
+          Seq(decisions, toAppend).foreach(Ops.freeLogicalRddBlocks(_))
         }
         (): Unit
       }
@@ -531,7 +537,7 @@ object StreamingIndexIngest {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxPath))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workDir))
     // three independent pre-seed builds, overlapped (Ops.concurrently)
-    graft.operators.Ops.concurrently(
+    Ops.concurrently(
       () => IndexStore.buildExactVecIndex(vecs, "vec_id", "vec",
         exactTable, s"$idxPath/$exactTable"),
       () => IndexStore.buildSrpIndex(vecs, srpTable, s"$idxPath/$srpTable"),
@@ -627,24 +633,24 @@ object StreamingIndexIngest {
           val (accepted, decisions) = IndexStore.dedupIngestGateVecCheck(
             bs, batch, exactTable, srpTable, threshold = 0.9999,
             ivfTable = Some(ivfTable), ivfThreshold = 0.999)
-          val acceptedP = accepted.localCheckpoint()
+          // already pinned pre-append, as in the text gate
           decisions
-            .unionByName(acceptedP.select(col("vec_id"),
+            .unionByName(accepted.select(col("vec_id"),
               lit("accepted").as("gate")))
             .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-          val kfps = acceptedP.select(col("vec_id").as("query_id"),
+          val kfps = accepted.select(col("vec_id").as("query_id"),
             IndexStore.vecFingerprint(col("vec")).as("fp"))
           val alreadyIndexed = bs.table(s"${exactTable}_fps")
             .select(col("vec_id").as("__ix_id"), col("fp"))
             .join(kfps, "fp")
             .where(col("__ix_id") === col("query_id"))
             .select(col("query_id").as("vec_id"))
-          val toAppend = acceptedP
+          val toAppend = accepted
             .join(alreadyIndexed, Seq("vec_id"), "left_anti")
             .localCheckpoint() // three consumers below
           // srp+ivf overlap; exact-vec stays LAST (same contract as the
           // text gate: its self-probe guard marks the batch complete)
-          graft.operators.Ops.concurrently(
+          Ops.concurrently(
             () => IndexStore.appendSrpIndex(toAppend, srpTable),
             () => IndexStore.appendIvfIndex(bs, toAppend, ivfTable))
           IndexStore.appendExactVecIndex(toAppend, "vec_id", "vec",
@@ -654,6 +660,8 @@ object StreamingIndexIngest {
           IndexStore.autoCompact(bs, "exact", exactTable,
             autoCompactAppends)
           BatchManifest.commit(sinkDir, batchId)
+          // the same drain-end release as the text gate
+          Seq(decisions, toAppend).foreach(Ops.freeLogicalRddBlocks(_))
         }
         (): Unit
       }

@@ -95,7 +95,7 @@ class AuthorityIndexSpec extends SparkSpec {
     assert(served(tbl) == once)
     // compaction raises the high-water mark; the same key is now
     // skipped entirely
-    IndexStore.compactAuthorityIndex(spark, tbl, s"$path/c1")
+    IndexStore.compact(spark, "auth", tbl, s"$path/c1")
     assert(!IndexStore.appendAuthorityIndex(delta, "source", "doc_id",
       "text", tbl, batchKey = 1L))
     assert(served(tbl) == once)
@@ -108,7 +108,7 @@ class AuthorityIndexSpec extends SparkSpec {
     IndexStore.appendAuthorityIndex(docs.where($"doc_id" > 2L),
       "source", "doc_id", "text", tbl, batchKey = 1L)
     val before = served(tbl)
-    IndexStore.compactAuthorityIndex(spark, tbl, s"$path/c1")
+    IndexStore.compact(spark, "auth", tbl, s"$path/c1")
     assert(served(tbl) == before)
     val bks = spark.table(s"${tbl}_aph").select("bk").distinct()
       .as[Long].collect().toSet

@@ -83,6 +83,28 @@ class CentralitySpec extends SparkSpec {
     assert(e.getMessage.contains("ppm"))
   }
 
+  test("bounded driver serve matches the distributed fixed point across " +
+      "node and endpoint id types") {
+    // the distributed joins coerce mismatched id types; the driver loop
+    // looks endpoints up in a map keyed by node id, so an endpoint of
+    // another type (a decimal or string rendering of the same id) must
+    // be cast first — otherwise every edge misses the vertex map and
+    // only teleport mass survives
+    val nodes = Seq(1L, 2L, 3L, 4L).toDF("id")
+    val raw = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L))
+      .toDF("src", "dst", "w")
+    for (endpointType <- Seq("int", "decimal(20,0)", "string")) {
+      val edges = raw.select(col("src").cast(endpointType).as("src"),
+        col("dst").cast(endpointType).as("dst"), col("w"))
+      val dist = Centrality.pageRank(nodes, edges, 4, weightCol = Some("w"))
+        .as[(Long, Long)].collect().toMap
+      val drv = Centrality.pageRankBoundedWeighted(nodes, edges, 4)
+        .as[(Long, Long)].collect().toMap
+      assert(drv == dist, s"driver serve diverged for $endpointType endpoints")
+      assert(dist.values.toSet.size > 1, "ranks must not be teleport-only")
+    }
+  }
+
   test("mass is conserved up to floor loss across many iterations") {
     // ring + chords + a dangling tail: mixed in/out degrees, dangling
     // mass in play every iteration. Floor loss is bounded by a few

@@ -83,7 +83,7 @@ class HllSpec extends SparkSpec {
     IndexStore.appendHllIndex(odd, "lang", "item", tbl)
     assert(served == direct)
     // compaction folds the physical rows without changing content
-    IndexStore.compactHllIndex(spark, tbl, s"/tmp/graft_index/${tbl}_c")
+    IndexStore.compact(spark, "hll", tbl, s"/tmp/graft_index/${tbl}_c")
     assert(served == direct)
     val folded = spark.table(s"${tbl}_hregs").count()
     assert(folded == direct.size.toLong)

@@ -520,7 +520,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(before.forall(_._1 < 300000), "controls must match nothing")
     // take-down: erased ids never probe again, the rest are untouched
     val erased = ids.sorted.take(10).toSeq
-    IndexStore.deleteFromExactIndex(spark, ex, erased.toDF("doc_id"),
+    IndexStore.deleteFrom(spark, "exact", ex, erased.toDF("doc_id"),
       s"$idxPath/$ex")
     val after = IndexStore.probeExact(spark, batch, "doc_id", "text", ex)
       .as[(Long, Long)].collect().toSet
@@ -841,9 +841,9 @@ class IndexStoreSpec extends SparkSpec {
     val probes = scaledOf(va, 5000).unionByName(scaledOf(vb, 6000))
     // erasure: the same bucket-preserving rewrite as the fp kinds,
     // over the codes schema
-    IndexStore.deleteFromSrpIndex(spark, sq, Seq(va).toDF("vec_id"),
+    IndexStore.deleteFrom(spark, "srp", sq, Seq(va).toDF("vec_id"),
       s"$idxPath/lc_sq_d")
-    IndexStore.deleteFromIvfIndex(spark, iq, Seq(va).toDF("vec_id"),
+    IndexStore.deleteFrom(spark, "ivf", iq, Seq(va).toDF("vec_id"),
       s"$idxPath/lc_iq_d")
     def matchedPairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "match_id").as[(Long, Long)].collect().toSet
@@ -856,8 +856,8 @@ class IndexStoreSpec extends SparkSpec {
       assert(got((vb + 6000, vb)), s"$kind: undeleted vec must keep matching")
     }
     // compaction: probe results unchanged
-    IndexStore.compactSrpIndex(spark, sq, s"$idxPath/lc_sq_c")
-    IndexStore.compactIvfIndex(spark, iq, s"$idxPath/lc_iq_c")
+    IndexStore.compact(spark, "srp", sq, s"$idxPath/lc_sq_c")
+    IndexStore.compact(spark, "ivf", iq, s"$idxPath/lc_iq_c")
     assert(matchedPairs(
       IndexStore.probeSrpNearDupQuantized(spark, probes, sq)) == sqAfter)
     assert(matchedPairs(
@@ -996,16 +996,16 @@ class IndexStoreSpec extends SparkSpec {
       s"$idxPath/$tbl")
     // erase the planted copies: the surviving spans must equal an index
     // that never contained them
-    IndexStore.deleteFromWinnowIndex(spark, tbl,
+    IndexStore.deleteFrom(spark, "winnow", tbl,
       winCorpus.where(col("doc_id") >= 100000).select("doc_id"),
       s"$idxPath/$tbl")
     val expect = Dedup.repeatedWindowSpans(docs, "doc_id", "text")
     assertSameRows(IndexStore.repeatedWindowSpansFromIndex(spark, tbl),
       expect, "erased docs must stop contributing spans and doc counts")
-    IndexStore.compactWinnowIndex(spark, tbl, s"$idxPath/$tbl")
+    IndexStore.compact(spark, "winnow", tbl, s"$idxPath/$tbl")
     assertSameRows(IndexStore.repeatedWindowSpansFromIndex(spark, tbl),
       expect, "compaction must not change consumer results")
-    assert(IndexStore.vacuumWinnowIndex(spark, tbl).nonEmpty,
+    assert(IndexStore.vacuum(spark, "winnow", tbl).nonEmpty,
       "the swaps above retired directories to reclaim")
   }
 
@@ -1250,7 +1250,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(before.nonEmpty)
     // erase half the matched corpus docs
     val erased = before.map(_.getLong(1)).distinct.sorted.take(before.size / 2)
-    IndexStore.deleteFromMinhashIndex(spark, del, "doc_id",
+    IndexStore.deleteFrom(spark, "minhash", del,
       erased.toDF("doc_id"), s"$idxPath/$del")
     val after = IndexStore.probeMinhash(spark, probes, "doc_id", "text", del)
       .collect().toSeq
@@ -1284,7 +1284,7 @@ class IndexStoreSpec extends SparkSpec {
     // erasure: matched docs stop matching, everything else untouched
     val before = probed.collect().toSeq
     val erased = before.map(_.getLong(1)).distinct.sorted.take(before.size / 2)
-    IndexStore.deleteFromSimhashIndex(spark, sh, erased.toDF("doc_id"),
+    IndexStore.deleteFrom(spark, "simhash", sh, erased.toDF("doc_id"),
       s"$idxPath/$sh")
     val after = IndexStore.probeSimhash(spark, probes, "doc_id", "text", sh)
       .collect().toSeq
@@ -1294,12 +1294,12 @@ class IndexStoreSpec extends SparkSpec {
       before.filterNot(r => erasedSet.contains(r.getLong(1))).toSet)
     // compaction: results unchanged, then vacuum reclaims the two
     // retired generations (the erasure's and the compaction's)
-    IndexStore.compactSimhashIndex(spark, sh, s"$idxPath/$sh")
+    IndexStore.compact(spark, "simhash", sh, s"$idxPath/$sh")
     val compacted = IndexStore.probeSimhash(spark, probes, "doc_id", "text", sh)
       .collect().toSeq
     assert(compacted.toSet == after.toSet,
       "compaction must not change probe results")
-    assert(IndexStore.vacuumSimhashIndex(spark, sh).size == 2)
+    assert(IndexStore.vacuum(spark, "simhash", sh).size == 2)
     assert(IndexStore.probeSimhash(spark, probes, "doc_id", "text", sh)
       .count() == after.size, "probes keep working after vacuum")
   }
@@ -1327,7 +1327,7 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.buildIvfIndex(corpusVecs, ivfCentroids, del, s"$idxPath/$del")
     val queries = corpusVecs.where(col("vec_id") < 10)
     val erased = (10L until 40L).toDF("vec_id")
-    IndexStore.deleteFromIvfIndex(spark, del, erased, s"$idxPath/$del")
+    IndexStore.deleteFrom(spark, "ivf", del, erased, s"$idxPath/$del")
 
     val after = IndexStore.probeIvf(spark, queries, del, k = 5, nprobe = 3)
     val erasedSet = (10L until 40L).toSet
@@ -1357,7 +1357,7 @@ class IndexStoreSpec extends SparkSpec {
       .collect().toSeq
     val preCount = new java.io.File(s"$idxPath/$cmp/${cmp}_lists")
       .listFiles((_, n) => n.startsWith("part-")).length
-    IndexStore.compactIvfIndex(spark, cmp, s"$idxPath/$cmp")
+    IndexStore.compact(spark, "ivf", cmp, s"$idxPath/$cmp")
     assert(preCount > 8, s"appends should have accumulated files, saw $preCount")
     // k=8 cluster ids hash into ≤8 buckets (several share a bucket, some
     // buckets are empty and write no file) — so: at most one file per
@@ -1512,12 +1512,12 @@ class IndexStoreSpec extends SparkSpec {
     Seq(s"${prm}_bands__compacting", s"${prm}_shingles__compacting")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     IndexStore.buildMinhashIndex(docs, "doc_id", "text", prm, s"$idxPath/$prm")
-    IndexStore.compactMinhashIndex(spark, prm, s"$idxPath/$prm")
+    IndexStore.compact(spark, "minhash", prm, s"$idxPath/$prm")
     // metadata still present → mismatches still rejected after the swap
     intercept[IllegalArgumentException] {
       IndexStore.probeMinhash(spark, probes, "doc_id", "text", prm, bands = 32)
     }
-    IndexStore.deleteFromMinhashIndex(spark, prm, "doc_id",
+    IndexStore.deleteFrom(spark, "minhash", prm,
       Seq(0L).toDF("doc_id"), s"$idxPath/${prm}_postdel")
     intercept[IllegalArgumentException] {
       IndexStore.probeMinhash(spark, probes, "doc_id", "text", prm,
@@ -1554,7 +1554,7 @@ class IndexStoreSpec extends SparkSpec {
       "vacuum is idempotent")
     // the whole-index wrapper covers both tables; nothing further to
     // reclaim here (bands just vacuumed, shingles never rewritten)
-    assert(IndexStore.vacuumMinhashIndex(spark, vac).isEmpty)
+    assert(IndexStore.vacuum(spark, "minhash", vac).isEmpty)
   }
 
   // ---- persisted bigram-LM model table ------------------------------
@@ -1602,7 +1602,7 @@ class IndexStoreSpec extends SparkSpec {
     val before = IndexStore.scoreFromLmIndex(spark, tbl, eval_)
       .orderBy("doc_id").collect().toSeq
     val preRows = spark.table(s"${tbl}_counts").count()
-    IndexStore.compactLmIndex(spark, tbl, s"$idxPath/$tbl")
+    IndexStore.compact(spark, "lm", tbl, s"$idxPath/$tbl")
     val postRows = spark.table(s"${tbl}_counts").count()
     // physical state after folding == b's live bigrams, nothing more
     assert(postRows == NgramLm.bigramCounts(b).count(),
@@ -1760,7 +1760,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.appendDoremiIndexKeyed(b, "doc_id", "source",
       "text", tbl, 1L))
     assert(weights() == once, "pre-compaction replay double-counted")
-    IndexStore.compactDoremiIndexKeyed(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "doremik", tbl, s"$idxPath/${tbl}_c1")
     assert(weights() == once, "compaction changed the mixture")
     // replay AFTER compaction: skipped outright by the high-water mark
     assert(!IndexStore.appendDoremiIndexKeyed(b, "doc_id", "source",
@@ -1800,14 +1800,14 @@ class IndexStoreSpec extends SparkSpec {
       appended.getAs[Long]("appends_total") == 1L)
     assert(appended.getAs[Long]("files") > fresh.getAs[Long]("files"),
       "an append must add physical files")
-    IndexStore.compactExactIndex(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "exact", tbl, s"$idxPath/${tbl}_c1")
     val compacted = report()
     assert(compacted.getAs[Long]("rows") == a.count() + b.count())
     assert(compacted.getAs[Long]("appends_since_compact") == 0L,
       "compaction must reset the auto-compact clock")
     assert(compacted.getAs[Long]("retired_dirs") == 1L,
       "the swapped-out directory must show as awaiting vacuum")
-    assert(IndexStore.vacuumExactIndex(spark, tbl).nonEmpty)
+    assert(IndexStore.vacuum(spark, "exact", tbl).nonEmpty)
     assert(report().getAs[Long]("retired_dirs") == 0L)
     intercept[IllegalArgumentException] {
       IndexStore.healthReport(spark, Seq(("nosuch", tbl)))
@@ -1857,7 +1857,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.appendLmIndexKeyed(b, "doc_id", "text", tbl, 1L))
     assert(score() == once, "pre-compaction replay double-counted")
     // compaction folds keys away — marks must rise FIRST
-    IndexStore.compactLmIndexKeyed(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "lmk", tbl, s"$idxPath/${tbl}_c1")
     assert(score() == once, "compaction changed the model")
     // replay AFTER compaction: skipped outright by the high-water mark
     assert(!IndexStore.appendLmIndexKeyed(b, "doc_id", "text", tbl, 1L))
@@ -1894,7 +1894,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.unlearnFromLmIndexKeyed(
       docs.where(col("doc_id") === 0L), "doc_id", "text", tbl, -1L))
     assert(score() == after, "pre-compaction unlearn replay double-negated")
-    IndexStore.compactLmIndexKeyed(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "lmk", tbl, s"$idxPath/${tbl}_c1")
     // replayed unlearn post-compaction: skipped by the low-water mark
     assert(!IndexStore.unlearnFromLmIndexKeyed(
       docs.where(col("doc_id") === 0L), "doc_id", "text", tbl, -1L))
@@ -2052,7 +2052,7 @@ class IndexStoreSpec extends SparkSpec {
     // take-down: erased ids vanish from the store and from every
     // subsequent probe
     val toErase = copies.select("vec_id")
-    IndexStore.deleteFromPqIndex(spark, tbl, toErase, s"$idxPath/${tbl}_td")
+    IndexStore.deleteFrom(spark, "pq", tbl, toErase, s"$idxPath/${tbl}_td")
     assert(spark.table(s"${tbl}_codes")
       .where(col("vec_id") >= 100000).count() == 0)
     assert(IndexStore.probePqTopK(spark,
@@ -2088,7 +2088,7 @@ class IndexStoreSpec extends SparkSpec {
       .orderBy("doc_id").collect().toSeq
     assert(scoreHeldOut(Some("src0")) == want)
     // compaction folds the appended file sets; serving unchanged
-    IndexStore.compactLmSliceIndex(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "lms", tbl, s"$idxPath/${tbl}_c1")
     assert(scoreHeldOut(Some("src0")) == want)
     // unlearning src1's docs entirely: the full model now equals a
     // retrain without src1, and holding out src0 excludes both
@@ -2130,7 +2130,7 @@ class IndexStoreSpec extends SparkSpec {
     // pre-compaction replay: rows written, row-identity dedup cancels
     assert(IndexStore.appendQhistIndex(b, "source", "v", tbl, 1L))
     assert(served() == once, "pre-compaction replay double-counted")
-    IndexStore.compactQhistIndex(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "qh", tbl, s"$idxPath/${tbl}_c1")
     assert(served() == once)
     assert(!IndexStore.appendQhistIndex(b, "source", "v", tbl, 1L))
     // exact unlearn equals a rebuild without the slice
@@ -2173,7 +2173,7 @@ class IndexStoreSpec extends SparkSpec {
     // dedup cancels them — sums must NOT double
     assert(IndexStore.appendCmsIndex(b, "source", "item", tbl, 1L))
     assert(served() == once, "pre-compaction replay double-counted")
-    IndexStore.compactCmsIndex(spark, tbl, s"$idxPath/${tbl}_c1")
+    IndexStore.compact(spark, "cms", tbl, s"$idxPath/${tbl}_c1")
     assert(served() == once, "compaction changed the sketch")
     // post-compaction replay: skipped by the high-water mark
     assert(!IndexStore.appendCmsIndex(b, "source", "item", tbl, 1L))
@@ -2195,7 +2195,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(served() == rebuilt, "replayed unlearn double-subtracted")
     // compaction folds the cancellation pairs physically, same serving;
     // the low-water mark then skips the stale key outright
-    IndexStore.compactCmsIndex(spark, tbl, s"$idxPath/${tbl}_c2")
+    IndexStore.compact(spark, "cms", tbl, s"$idxPath/${tbl}_c2")
     assert(served() == rebuilt)
     assert(!IndexStore.unlearnFromCmsIndex(
       itemsAll.where(col("source") === "src0"), "source", "item", tbl, -1L))

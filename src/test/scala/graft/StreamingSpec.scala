@@ -292,6 +292,37 @@ class StreamingSpec extends SparkSpec {
     assert(b1Rewrites.where($"gate" =!= "accepted").count() == 0)
   }
 
+  test("a gate drain leaves none of its pinned blocks behind") {
+    // each drain pins its stage results, the probes' and pair kernels'
+    // boundaries and the append source; none outlives the drain. No GC
+    // is forced: the context cleaner would eventually reclaim the
+    // blocks, but a long-lived stream must not depend on it
+    import graft.streaming.StreamingIndexIngest
+    import graft.operators.IndexStore
+    val work = "/tmp/graft_sgate_pins"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+    Seq("graft_t_pgx_fps", "graft_t_pgw_wins", "graft_t_pgm_bands",
+      "graft_t_pgm_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val docs = Tables.load(spark, sf0001, "documents")
+      .select("doc_id", "text").where($"doc_id" < 300)
+    IndexStore.buildGateIndexes(docs, "doc_id", "text", "graft_t_pgx",
+      "graft_t_pgw", "graft_t_pgm", s"$work/idx", window = 40)
+    val (b1, b2) = StreamingIndexIngest.gateBatches(docs)
+    val src = s"$work/src"
+    StreamingIndexIngest.stageBatchFile(b1, work, src, "b1")
+    StreamingIndexIngest.stageBatchFile(b2, work, src, "b2")
+    def pinned: Map[Int, Long] = spark.sparkContext.getRDDStorageInfo
+      .map(r => r.id -> (r.memSize + r.diskSize)).filter(_._2 > 0).toMap
+    val before = pinned.keySet
+    StreamingIndexIngest.runGateStream(spark, src, s"$work/sink",
+      s"$work/ckpt", "graft_t_pgx", "graft_t_pgw", "graft_t_pgm")
+    val leaked = pinned -- before
+    assert(StreamingIndexIngest.readGateSink(spark, s"$work/sink").count() ==
+      b1.count() + b2.count(), "both staged batches must drain")
+    assert(leaked.isEmpty, s"drain blocks left pinned (rdd id -> bytes): $leaked")
+  }
+
   test("a take-down between micro-batches stops gating the next drained file") {
     // the reference's deletion reconciliation runs BETWEEN cron syncs;
     // composed here: drain one staged file, take a doc down from all
@@ -1469,6 +1500,25 @@ class StreamingSpec extends SparkSpec {
     // the target source never cuts at dsir
     assert(att.join(corpus.select("doc_id", "source"), "doc_id")
       .where($"cut_stage" === "dsir" && $"source" === "src0").count() == 0)
+  }
+
+  test("a DSIR hydration sharing the stream's index tables is refused") {
+    import graft.streaming.StreamingCorpusBuild
+    import graft.operators.IndexStore
+    val (corpus, evals, budgets) =
+      ExtensionQueries.corpusBuildFixture(spark, sf0001)
+    val work = s"/tmp/graft_scorpus_clash/${System.nanoTime()}"
+    val tbl = s"graft_scb_clash_${System.nanoTime()}"
+    val fit = StreamingCorpusBuild.pinnedDsirFromCorpus(
+      corpus, evals, 10, "src0")
+    val e = intercept[IllegalArgumentException] {
+      StreamingCorpusBuild.run(spark, corpus, evals, budgets, work, tbl,
+        s"$work/idx", dsir = Some(fit.copy(
+          indexTables = IndexStore.tablesOf("exact", tbl))))
+    }
+    assert(e.getMessage.contains(s"${tbl}_fps"))
+    assert(!new java.io.File(s"$work/sink").exists(),
+      "the refusal must come before any micro-batch runs")
   }
 
   test("persisted-index DSIR hydration is bit-identical to the batch-side fit") {
