@@ -19,7 +19,9 @@ def bench_compare(old_path, new_path, factor=1.3, floor=1.0):
     ride every run; a query is flagged REGRESSED only when its new/old
     ratio exceeds `factor` x the CONTROL ratio (and the query is above
     `floor` seconds in either run — sub-second queries are scheduling
-    noise). Exits non-zero iff calibrated regressions exist."""
+    noise). A query whose entry carries `err` in either dump is listed as
+    ERRORED instead of compared. Exits non-zero iff calibrated
+    regressions exist."""
     old = json.load(open(old_path)); new = json.load(open(new_path))
 
     def ctl(d):
@@ -29,10 +31,18 @@ def bench_compare(old_path, new_path, factor=1.3, floor=1.0):
         return d.get("control_cpu", 0.0), d.get("control_io", 0.0)
 
     (ocpu, oio), (ncpu, nio) = ctl(old), ctl(new)
-    ctl_ratio = max(ncpu / ocpu if ocpu > 0 else 1.0,
-                    nio / oio if oio > 0 else 1.0, 1.0)
-    oq = {k: v["sec"] for k, v in old.get("queries", {}).items()}
-    nq = {k: v["sec"] for k, v in new.get("queries", {}).items()}
+    # unclamped: below 1.0 the new run's machine was faster, which the
+    # clamped calibration deliberately does not credit
+    raw_ratio = max(ncpu / ocpu if ocpu > 0 else 1.0,
+                    nio / oio if oio > 0 else 1.0)
+    ctl_ratio = max(raw_ratio, 1.0)
+    oqs, nqs = old.get("queries", {}), new.get("queries", {})
+    # Bench records a time-to-failure as "sec" for an errored query;
+    # that is no timing, so such queries are listed, not compared
+    errored = sorted(k for k in set(oqs) & set(nqs)
+                     if "err" in oqs[k] or "err" in nqs[k])
+    oq = {k: v["sec"] for k, v in oqs.items() if k not in errored}
+    nq = {k: v["sec"] for k, v in nqs.items() if k not in errored}
     common = sorted(set(oq) & set(nq))
     regressed, improved = [], []
     for k in common:
@@ -46,12 +56,18 @@ def bench_compare(old_path, new_path, factor=1.3, floor=1.0):
             improved.append((k, a, b, ratio))
     for k, a, b, r in sorted(regressed, key=lambda t: -t[3]):
         print(f"REGRESSED {k}: {a:.2f}s -> {b:.2f}s (x{r:.2f}, "
-              f"control x{ctl_ratio:.2f})")
+              f"control x{ctl_ratio:.2f}, unclamped x{raw_ratio:.2f})")
     for k, a, b, r in sorted(improved, key=lambda t: t[3]):
         print(f"IMPROVED  {k}: {a:.2f}s -> {b:.2f}s (x{r:.2f})")
+    for k in errored:
+        errs = [f"{side}: {d[k]['err'][:160]}"
+                for side, d in (("old", oqs), ("new", nqs)) if "err" in d[k]]
+        print(f"ERRORED   {k} ({'; '.join(errs)})")
     tot_o = sum(oq[k] for k in common); tot_n = sum(nq[k] for k in common)
     print(json.dumps({
         "n_common": len(common), "control_ratio": round(ctl_ratio, 3),
+        "control_ratio_unclamped": round(raw_ratio, 3),
+        "errored": errored,
         "control_cpu": [ocpu, ncpu], "control_io": [oio, nio],
         "total_old": round(tot_o, 1), "total_new": round(tot_n, 1),
         "n_regressed_calibrated": len(regressed),

@@ -172,8 +172,10 @@ object Bench {
     // never parsed it (BENCH_r*.json parsed: null). This line carries
     // every summary field but no per-query map (~400 bytes — it survives
     // any truncation window and parses standalone); the per-query map
-    // lives in the full line and in the SPARK_GRAFT_BENCH_OUT dump.
-    println(s"""{"metric":"total","sf":"$sfDir",$tail}""")
+    // lives in the full line and in the SPARK_GRAFT_BENCH_OUT dump. Its
+    // own tag keeps a parser that matches on "metric" from taking it for
+    // the full line.
+    println(s"""{"metric":"total_compact","sf":"$sfDir",$tail}""")
     outPath.foreach { p =>
       val perQuery = results.map { case (k, v, e, n) =>
         jstr(k) + ":{" + f""""sec":$v%.3f,"reps":$n""" +

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Atomic commit protocol for a versioned parquet table — the merge
   * target's transactional guarantee.
@@ -18,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * restores the guarantee with the classic pointer swap:
   *
   *   1. write the new version's data to `base/v(N+1)` (never touching
-  *      the version readers are on);
+  *      the version readers are on), then its schema to the sidecar
+  *      `base/v(N+1)/_schema.json`;
   *   2. write the version number to a temp pointer file and fsync it;
   *   3. atomically rename the temp file over `base/_COMMIT`.
   *
@@ -28,6 +30,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * attempt. Step 3 is a single-file rename: atomic on POSIX and HDFS;
   * on S3-style stores the equivalent is a conditional PUT of the
   * pointer object. IncrementalSpec drives the crash window.
+  *
+  * The sidecar makes a version self-describing: [[read]] hands its
+  * schema to the parquet reader, which then skips schema inference — a
+  * one-task Spark job per read that would only re-derive what the
+  * writer just wrote. Spark's file listing ignores `_`-prefixed files,
+  * [[vacuum]] deletes the sidecar with its directory, and a re-stage of
+  * an uncommitted version replaces it (the parquet overwrite deletes
+  * the directory first). A crash between the parquet write and the
+  * sidecar write leaves an uncommitted version without a sidecar; a
+  * version directory without one — also any staged before sidecars
+  * existed — is read with the inferred schema, the only fallback.
   *
   * Durability boundary, stated honestly: the protocol orders WRITER
   * crashes (process death at any step), not media-level power loss —
@@ -44,6 +57,22 @@ object VersionedTable {
 
   private def pointer(base: String) = Paths.get(base, "_COMMIT")
 
+  private def sidecar(base: String, version: Int) =
+    Paths.get(base, s"v$version", "_schema.json")
+
+  /** The schema a parquet read infers for data written with `t`: every
+    * field, array element and map value nullable, recursively, as the
+    * file source resolves it (`DataType.asNullable`, which is private to
+    * Spark). Field names, types and metadata are kept. */
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
   /** The committed version, if any commit has ever succeeded. */
   def currentVersion(base: String): Option[Int] = {
     val p = pointer(base)
@@ -54,8 +83,10 @@ object VersionedTable {
 
   /** Stage `df` as version `version` WITHOUT committing it — readers
     * stay on the current committed version until [[commit]] runs. */
-  def stage(df: DataFrame, base: String, version: Int): Unit =
+  def stage(df: DataFrame, base: String, version: Int): Unit = {
     df.write.mode("overwrite").parquet(s"$base/v$version")
+    Files.writeString(sidecar(base, version), asRead(df.schema).json)
+  }
 
   /** Atomically publish `version`: temp pointer + fsync + rename. */
   def commit(base: String, version: Int): Unit = {
@@ -81,7 +112,18 @@ object VersionedTable {
   def read(spark: SparkSession, base: String): DataFrame = {
     val v = currentVersion(base).getOrElse(
       throw new IllegalStateException(s"no committed version under $base"))
-    spark.read.parquet(s"$base/v$v")
+    read(spark, base, v)
+  }
+
+  /** Read `version`, which the caller resolved through [[currentVersion]]
+    * (or a retained predecessor of it) — never an uncommitted one. */
+  def read(spark: SparkSession, base: String, version: Int): DataFrame = {
+    val dir = s"$base/v$version"
+    val schema = sidecar(base, version)
+    if (Files.exists(schema)) spark.read
+      .schema(DataType.fromJson(Files.readString(schema)).asInstanceOf[StructType])
+      .parquet(dir)
+    else spark.read.parquet(dir)
   }
 
   /** Deletes version directories strictly older than committed − `keep`

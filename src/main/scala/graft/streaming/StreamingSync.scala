@@ -99,7 +99,7 @@ object StreamingSync {
         val merged = committed match {
           case None => batch
           case Some(v) => Incremental.merge(
-            spark.read.parquet(s"$tgtBase/v$v"), batch, "event_id")
+            VersionedTable.read(spark, tgtBase, v), batch, "event_id")
         }
         VersionedTable.write(merged, tgtBase, committed.getOrElse(0) + 1)
         (): Unit
