@@ -20,6 +20,18 @@ object Bench {
     Seq("s1_scan_pruned_filtered", "w8_partition_fanout",
       "sr2_streaming_merge")
 
+  /** `s` as a JSON string literal. Escapes EVERY control character —
+    * exception messages and job descriptions can embed arbitrary bytes,
+    * and one raw control char makes a JSON line unparseable exactly when
+    * its diagnostics matter. */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '\\' => "\\\\"
+      case '"' => "\\\""
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -121,16 +133,6 @@ object Bench {
         else times.sorted.apply((times.length - 1) / 2)
       (name, med, err, i)
     }
-    // escape EVERY control character — exception messages can embed
-    // arbitrary bytes, and one raw control char makes the single JSON
-    // result line unparseable exactly when its diagnostics matter
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // The harness that archives this line keeps only its TAIL (2000
     // chars in round 9 — 57 of 147 queries survived, and the leading
     // total was cut). Defend against truncation-from-the-front: times

@@ -25,16 +25,6 @@ object ProfileQuery {
   private final class JobSpan(val id: Int, val start: Long,
       @volatile var end: Long, val desc: String, val group: String)
 
-  // full JSON escaping for job descriptions (they embed arbitrary SQL
-  // text — quotes, backslashes, control chars)
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse(
@@ -88,7 +78,7 @@ object ProfileQuery {
     spans.foreach { s =>
       println(f"""{"job":${s.id},"t0":${(s.start - t0) / 1e9}%.3f,""" +
         f""""sec":${(s.end - s.start) / 1e9}%.3f,"grp":"${s.group}",""" +
-        s""""desc":${jstr(s.desc)}}""")
+        s""""desc":${Bench.jstr(s.desc)}}""")
     }
     // per-execution rollup (wall span of each group, overlap-aware: the
     // union of its job intervals)

@@ -58,16 +58,11 @@ object StreamingBoilerplate {
     val srcDir = s"$workDir/src"
     corpus.repartition(2).write.mode("overwrite").parquet(srcDir)
     val sinkDir = s"$workDir/sink"
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the BatchManifest replay protocol: a replayed COMMITTED
-        // batch is a no-op; an uncommitted one re-derives its clean
-        // byte-identically (the sketch is frozen) and overwrites its
-        // own directory wholesale — append-duplication is impossible
-        if (!BatchManifest.committedIds(sinkDir).contains(batchId)) {
+    BatchManifest.drain(spark, srcDir, s"$workDir/ckpt_${System.nanoTime()}") {
+      (batch, batchId) =>
+        // a replayed uncommitted batch re-derives its clean
+        // byte-identically (the sketch is frozen)
+        BatchManifest.guarded(sinkDir, batchId) { _ =>
           CountMin.withEstimate(linesOf(batch), "k", regs)
             .where(col("k") === "" || col("est") < lit(thr))
             .groupBy("doc_id")
@@ -76,13 +71,9 @@ object StreamingBoilerplate {
                 array_sort(collect_list(struct(col("para_idx"), col("para")))),
                 x => x.getField("para"))).as("clean_text"))
             .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-          BatchManifest.commit(sinkDir, batchId)
+          ""
         }
-        (): Unit
-      }
-      .option("checkpointLocation", s"$workDir/ckpt_${System.nanoTime()}")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     BatchManifest.readCommitted(spark, sinkDir)(
         spark.emptyDataFrame)
       .orderBy("doc_id")

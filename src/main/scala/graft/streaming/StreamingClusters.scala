@@ -44,7 +44,7 @@ import graft.operators.{Components, Dedup, IndexStore}
   * every capped probe still links to its bucket's representative, which
   * transitively chains the bucket (the capHotBuckets guarantee).
   *
-  * Crash/replay (the BatchManifest protocol): labels and remap are
+  * Crash/replay (the [[BatchManifest]] protocol): labels and remap are
   * per-batch directories overwritten WHOLESALE on an uncommitted
   * replay; decisions re-derive deterministically from the last
   * COMMITTED state. An index append that ran before the crash is
@@ -66,13 +66,30 @@ import graft.operators.{Components, Dedup, IndexStore}
 object StreamingClusters {
 
   /** One micro-batch of the maintenance loop. Exposed for the replay
-    * drill; `commit = false` simulates a crash after the state writes
-    * but before the manifest commit. */
+    * drill; `commit = false` runs the batch's state writes alone, with
+    * neither the replay guard nor the commit — the state a crash just
+    * before the manifest commit leaves behind. */
   def processBatch(batch: DataFrame, batchId: Long, table: String,
       idxPath: String, stateDir: String, threshold: Double = 0.8,
-      commit: Boolean = true): Unit = {
+      commit: Boolean = true): Unit =
+    if (!commit) advance(batch, batchId, table, idxPath, stateDir, threshold)
+    else BatchManifest.guarded(stateDir, batchId) { _ =>
+      advance(batch, batchId, table, idxPath, stateDir, threshold)
+      // no-silent-growth: the manifest entry carries the batch's label
+      // delta and the remap snapshot size (read back from the written
+      // files — exact, O(batch)+O(merges)), so an operator watching the
+      // ledger sees the merge-bounded remap claim hold — or not —
+      // without ever scanning the sink
+      val spark = batch.sparkSession
+      val nl = spark.read.parquet(s"$stateDir/b$batchId/labels").count()
+      val nr = spark.read.parquet(s"$stateDir/b$batchId/remap").count()
+      s"labels=$nl remap=$nr"
+    }
+
+  /** The batch's state writes: steps 1-5 above. */
+  private def advance(batch: DataFrame, batchId: Long, table: String,
+      idxPath: String, stateDir: String, threshold: Double): Unit = {
     val spark = batch.sparkSession
-    if (BatchManifest.committedIds(stateDir).contains(batchId)) return
     val docs = batch.select("doc_id", "text").localCheckpoint()
     val first = !spark.catalog.tableExists(s"${table}_bands")
 
@@ -146,16 +163,6 @@ object StreamingClusters {
       .parquet(s"$stateDir/b$batchId/labels")
     composed.write.mode("overwrite")
       .parquet(s"$stateDir/b$batchId/remap")
-    // no-silent-growth: the manifest entry carries the batch's label
-    // delta and the remap snapshot size (read back from the written
-    // files — exact, O(batch)+O(merges)), so an operator watching the
-    // ledger sees the merge-bounded remap claim hold — or not —
-    // without ever scanning the sink
-    if (commit) {
-      val nl = spark.read.parquet(s"$stateDir/b$batchId/labels").count()
-      val nr = spark.read.parquet(s"$stateDir/b$batchId/remap").count()
-      BatchManifest.commit(stateDir, batchId, s"labels=$nl remap=$nr")
-    }
   }
 
   /** Folds the committed per-batch label deltas into ONE id-bucketed
@@ -175,7 +182,7 @@ object StreamingClusters {
     * mid-fold-crash window are drilled in StreamingSpec. */
   def foldLabels(spark: SparkSession, stateDir: String, table: String,
       path: String, nBuckets: Int = 8): Unit = {
-    val ids = BatchManifest.committedIds(stateDir)
+    val ids = BatchManifest.entries(stateDir).map(_.id)
     if (ids.isEmpty) return
     val upTo = ids.last
     val (already, prevTbl) = foldedState(spark, stateDir)
@@ -190,20 +197,13 @@ object StreamingClusters {
       .write.bucketBy(nBuckets, "id")
       .option("path", s"$path/$newTbl").mode("overwrite")
       .saveAsTable(newTbl)
-    // marker AFTER the CTAS (atomic rename, the BatchManifest stance)
-    val dir = new File(s"$stateDir/_folded")
-    dir.mkdirs()
-    val tmp = java.nio.file.Paths.get(s"$stateDir/_folded/.tmp-$upTo")
-    java.nio.file.Files.write(tmp,
-      newTbl.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$stateDir/_folded/$upTo"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // marker AFTER the CTAS, written atomically
+    val dir = s"$stateDir/_folded"
+    BatchManifest.atomicWrite(dir, upTo.toString, newTbl)
     // superseded generations are dead state now
     prevTbl.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.forall(_.isDigit) && f.getName.toLong < upTo)
-      .foreach(_.delete())
+    BatchManifest.markers(dir).filter(_.id < upTo)
+      .foreach(m => new File(s"$dir/${m.id}").delete())
   }
 
   /** (folded-up-to batch id, generation table name) — (-1, None) when
@@ -211,19 +211,14 @@ object StreamingClusters {
     * without one is invisible. */
   private def foldedState(spark: SparkSession, stateDir: String)
       : (Long, Option[String]) = {
-    val dir = new File(s"$stateDir/_folded")
-    val ms = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      .sortBy(_.getName.toLong)
-    ms.lastOption match {
+    BatchManifest.markers(s"$stateDir/_folded").lastOption match {
       case None => (-1L, None)
-      case Some(f) =>
-        val tbl = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim
+      case Some(m) =>
+        val tbl = m.content.trim
         // a marker whose table is gone (external takedown) must not
         // hide the pre-fold dirs — they were never deleted, so fall
         // back to reading everything
-        if (spark.catalog.tableExists(tbl)) (f.getName.toLong, Some(tbl))
+        if (spark.catalog.tableExists(tbl)) (m.id, Some(tbl))
         else (-1L, None)
     }
   }
@@ -232,7 +227,7 @@ object StreamingClusters {
     * generation (when one exists) plus the newer append-only label
     * deltas, read through the latest flat remap. */
   def currentLabels(spark: SparkSession, stateDir: String): DataFrame = {
-    val ids = BatchManifest.committedIds(stateDir)
+    val ids = BatchManifest.entries(stateDir).map(_.id)
     if (ids.isEmpty)
       return spark.range(0).select(col("id"), col("id").as("component"))
     val (already, prevTbl) = foldedState(spark, stateDir)
@@ -253,8 +248,8 @@ object StreamingClusters {
   }
 
   private def lastRemap(spark: SparkSession, stateDir: String): DataFrame =
-    BatchManifest.committedIds(stateDir).lastOption
-      .map(i => spark.read.parquet(s"$stateDir/b$i/remap"))
+    BatchManifest.entries(stateDir).lastOption
+      .map(e => spark.read.parquet(s"$stateDir/b${e.id}/remap"))
       .getOrElse(spark.range(0).select(col("id").as("old_c"),
         col("id").as("new_c")))
 
@@ -316,17 +311,9 @@ object StreamingClusters {
     // void). The restart also exercises the resume path structurally
     // on every run.
     Seq(col("doc_id") < 100000, col("doc_id") >= 100000).foreach { pred =>
-      pc.where(pred).coalesce(1).write.mode("append").parquet(srcDir)
-      val schema = spark.read.parquet(srcDir).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, table, idxPath, stateDir)
-        }
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      BatchManifest.stage(pc.where(pred), srcDir)
+      BatchManifest.drain(spark, srcDir, s"$workDir/ckpt")(
+        processBatch(_, _, table, idxPath, stateDir))
     }
     servedDecisions(spark, stateDir).orderBy("doc_id")
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,13 +24,10 @@ import graft.operators.{BestFitPacking, Contamination, Dsir, IndexStore, Ops, Qu
   * continuation spend is the fold of those tiny entries (#batches ×
   * #sources values, read driver-side; the [[StreamingPacking]]
   * continuation discipline). Replay safety likewise never rescans the
-  * sink: each batch writes its own `b<id>/` directory and commits a
-  * one-line manifest by atomic rename — a replayed COMMITTED batch
-  * short-circuits on its manifest entry, a replayed UNCOMMITTED batch
-  * re-derives identical decisions (inputs frozen, index probes
-  * self-id-filtered, the index re-append guarded by a bucket-local
-  * self-probe) and overwrites its directory wholesale. Readers union
-  * committed directories only, so partial writes are never visible.
+  * sink: commits follow the [[BatchManifest]] protocol, and a replayed
+  * UNCOMMITTED batch re-derives identical decisions (inputs frozen,
+  * index probes self-id-filtered, the index re-append self-probe
+  * guarded).
   *
   * What keeps the stream fully ORACLE-checkable: (1) batches are staged
   * in doc_id-RANGE order (a pure, monotone function of the data), so
@@ -165,15 +161,13 @@ object StreamingCorpusBuild {
     // empty pre-seed: the corpus dedups against itself, in arrival order
     IndexStore.buildExactIndex(corpus.where(lit(false)), "doc_id", "text",
       table, idxPath)
-    new File(srcDir).mkdirs()
 
     val evalPinned = evalDocs.localCheckpoint()
     // One stream START per staged file, all on the SAME checkpoint: the
     // resume path (process only files the checkpoint hasn't committed)
     // is exercised structurally on every run, not just in a drill.
     rangePreds(splits).foreach { pred =>
-      corpus.where(pred(col("doc_id")))
-        .coalesce(1).write.mode("append").parquet(srcDir)
+      BatchManifest.stage(corpus.where(pred(col("doc_id"))), srcDir)
       runStream(spark, srcDir, sinkDir, s"$workDir/ckpt", table,
         evalPinned, budgetsThunk(), contamThreshold, dsirThunk(),
         packBinSize, spanTable)
@@ -191,19 +185,10 @@ object StreamingCorpusBuild {
       budgets: DataFrame, contamThreshold: Int,
       dsir: Option[PinnedDsir] = None,
       packBinSize: Option[Long] = None,
-      spanTable: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(batch, batchId, evalDocs, budgets, table, sinkDir,
-          contamThreshold, dsir, packBinSize, spanTable)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      spanTable: Option[String] = None): Unit =
+    BatchManifest.drain(spark, srcDir, checkpointDir)(
+      curateBatch(_, _, evalDocs, budgets, table, sinkDir, contamThreshold,
+        dsir, packBinSize, spanTable))
 
   private def rangePreds(splits: Seq[Long])
       : Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = {
@@ -218,54 +203,36 @@ object StreamingCorpusBuild {
     * plus (when the pack stage is on) the batch's BIN count — the
     * continuation offset for cross-batch bin numbering, carried the
     * same way [[StreamingPacking]] carries it. */
-  private final case class Committed(batchId: Long,
-      spend: Map[String, Long], bins: Long)
+  private final case class Committed(spend: Map[String, Long], bins: Long)
 
-  /** Committed manifest entries, smallest batchId first. One tiny file
-    * per batch; reading them is O(#batches × #sources) driver work —
-    * never a sink data scan. The reserved `__bins` line (never a
-    * source name) carries the pack-stage bin count. */
-  private def committedEntries(sinkDir: String): Seq[Committed] = {
-    val dir = new File(s"$sinkDir/_manifest")
-    if (!dir.exists) Seq.empty
-    else dir.listFiles().toSeq
-      .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      .map { f =>
-        val lines = Files.readString(f.toPath).linesIterator
-          .filter(_.nonEmpty).map { line =>
-            val Array(src, n) = line.split('\t')
-            src -> n.toLong
-          }.toSeq
-        Committed(f.getName.toLong,
-          lines.filter(_._1 != "__bins").toMap,
-          lines.collectFirst { case ("__bins", n) => n }.getOrElse(0L))
-      }
-      .sortBy(_.batchId)
+  /** Parses an entry's `source\tn` lines; the reserved `__bins` line
+    * (never a source name) carries the pack-stage bin count. */
+  private def committedOf(e: BatchManifest.Entry): Committed = {
+    val lines = e.content.linesIterator.filter(_.nonEmpty).map { line =>
+      val Array(src, n) = line.split('\t')
+      src -> n.toLong
+    }.toSeq
+    Committed(lines.filter(_._1 != "__bins").toMap,
+      lines.collectFirst { case ("__bins", n) => n }.getOrElse(0L))
   }
 
   /** The committed sink — (doc_id, source, n, cut_stage); uncommitted
     * partial batch directories are invisible (no torn reads). */
-  def readSink(spark: SparkSession, sinkDir: String): DataFrame = {
-    val dirs = committedEntries(sinkDir).map(c => s"$sinkDir/b${c.batchId}")
-    if (dirs.isEmpty)
+  def readSink(spark: SparkSession, sinkDir: String): DataFrame =
+    BatchManifest.readCommitted(spark, sinkDir)(
       spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), col("id").as("n"), lit("").as("cut_stage"))
-    else spark.read.parquet(dirs: _*)
-  }
+        lit("").as("source"), col("id").as("n"), lit("").as("cut_stage")))
 
   /** The committed trainer-ready packs — (doc_id, n_tokens, bin_id) —
     * when the stream ran with `packBinSize` set; bin ids are dense and
     * globally unique across batches (each batch's count rides its
     * manifest entry). Uncommitted partials invisible, as [[readSink]]. */
-  def readPacks(spark: SparkSession, sinkDir: String): DataFrame = {
-    val dirs = committedEntries(sinkDir)
-      .map(c => s"$sinkDir/packs/b${c.batchId}")
-      .filter(d => new File(d).exists)
-    if (dirs.isEmpty)
+  def readPacks(spark: SparkSession, sinkDir: String): DataFrame =
+    BatchManifest.readDirs(spark,
+      BatchManifest.committedDirs(sinkDir, s"$sinkDir/packs")
+        .filter(d => new File(d).exists))(
       spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("n_tokens"), col("id").as("bin_id"))
-    else spark.read.parquet(dirs: _*)
-  }
+        col("id").as("n_tokens"), col("id").as("bin_id")))
 
   /** One micro-batch: curation → within-batch dedup (fineWebPipeline) →
     * cross-batch dedup (index probe) → decontamination → budget gate
@@ -276,199 +243,189 @@ object StreamingCorpusBuild {
       budgets: DataFrame, table: String, sinkDir: String,
       contamThreshold: Int, dsir: Option[PinnedDsir] = None,
       packBinSize: Option[Long] = None,
-      spanTable: Option[String] = None): Unit = {
-    val spark = batch.sparkSession // session coherence: see StreamingCuration
-    val committed = committedEntries(sinkDir)
-    // a replayed COMMITTED batch is a no-op — its decisions, rows, and
-    // spend delta are already durable
-    if (committed.exists(_.batchId == batchId)) return
-    // per-doc curation + within-batch keeper, decisions pinned
-    val staged = QualityRules.fineWebPipeline(batch)
-    val kept1 = batch.join(
-      staged.where(col("cut_stage") === "kept").select("doc_id"), "doc_id")
-      .localCheckpoint()
-    // cross-batch dedup: fingerprints accepted by EARLIER batches
-    // (self-id matches filtered inside probeExact, so a replay whose
-    // index append DID run still derives the same decisions)
-    val crossDup = IndexStore.probeExact(spark,
-        kept1.select("doc_id", "text"), "doc_id", "text", table)
-      .select(col("query_id").as("doc_id")).distinct()
-      .localCheckpoint()
-    val kept2 = kept1.join(crossDup, Seq("doc_id"), "left_anti")
-    // decontamination against the frozen eval set
-    val contam = Contamination
-      .sharedShingleCounts(kept2.select("doc_id", "text"), evalDocs)
-      .where(col("n_shared") >= contamThreshold).select("doc_id")
-      .localCheckpoint()
-    val kept3pre = kept2.join(contam, Seq("doc_id"), "left_anti")
-    // optional frozen-reference span cleaning (first after decon,
-    // mirroring the batch capstone): the batch's survivors probe the
-    // PERSISTED shingle-DF index — built batch-side over the reference
-    // corpus's post-decon survivors, so the hot set equals the batch
-    // build's exactly — covered extents cut in place, fully-covered
-    // docs cut at 'spanclean', and the budget ledger counts CLEANED
-    // tokens. Per-batch work is O(batch): only the batch's shingles
-    // move against the bucketed index.
-    val (kept3all, spanCut, cleanedN) = spanTable match {
-      case None => (kept3pre, None, None)
-      case Some(t) =>
-        val cleaned = Ops.checkpointKeepPartitioning(
-          SpanDedup.cleanedDocsWith(kept3pre.select("doc_id", "text"),
-            IndexStore.removalSpansFromIndex(spark, t,
-              kept3pre.select("doc_id", "text"))))
-        val cut = cleaned
-          .where(col("n_before") - col("n_removed") === 0)
-          .select("doc_id").localCheckpoint()
-        val rewritten = kept3pre.select("doc_id", "source")
-          .join(cleaned.where(col("n_before") - col("n_removed") > 0)
-            .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-          .select("doc_id", "text", "source")
-        (rewritten, Some(cut),
-          Some(cleaned.select(col("doc_id"),
-            (col("n_before") - col("n_removed")).as("__cn"))))
+      spanTable: Option[String] = None): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { entries =>
+      val spark = batch.sparkSession
+      val committed = entries.map(committedOf)
+      // per-doc curation + within-batch keeper, decisions pinned
+      val staged = QualityRules.fineWebPipeline(batch)
+      val kept1 = batch.join(
+        staged.where(col("cut_stage") === "kept").select("doc_id"), "doc_id")
+        .localCheckpoint()
+      // cross-batch dedup: fingerprints accepted by EARLIER batches
+      // (self-id matches filtered inside probeExact, so a replay whose
+      // index append DID run still derives the same decisions)
+      val crossDup = IndexStore.probeExact(spark,
+          kept1.select("doc_id", "text"), "doc_id", "text", table)
+        .select(col("query_id").as("doc_id")).distinct()
+        .localCheckpoint()
+      val kept2 = kept1.join(crossDup, Seq("doc_id"), "left_anti")
+      // decontamination against the frozen eval set
+      val contam = Contamination
+        .sharedShingleCounts(kept2.select("doc_id", "text"), evalDocs)
+        .where(col("n_shared") >= contamThreshold).select("doc_id")
+        .localCheckpoint()
+      val kept3pre = kept2.join(contam, Seq("doc_id"), "left_anti")
+      // optional frozen-reference span cleaning (first after decon,
+      // mirroring the batch capstone): the batch's survivors probe the
+      // PERSISTED shingle-DF index — built batch-side over the reference
+      // corpus's post-decon survivors, so the hot set equals the batch
+      // build's exactly — covered extents cut in place, fully-covered
+      // docs cut at 'spanclean', and the budget ledger counts CLEANED
+      // tokens. Per-batch work is O(batch): only the batch's shingles
+      // move against the bucketed index.
+      val (kept3all, spanCut, cleanedN) = spanTable match {
+        case None => (kept3pre, None, None)
+        case Some(t) =>
+          val cleaned = Ops.checkpointKeepPartitioning(
+            SpanDedup.cleanedDocsWith(kept3pre.select("doc_id", "text"),
+              IndexStore.removalSpansFromIndex(spark, t,
+                kept3pre.select("doc_id", "text"))))
+          val cut = cleaned
+            .where(col("n_before") - col("n_removed") === 0)
+            .select("doc_id").localCheckpoint()
+          val rewritten = kept3pre.select("doc_id", "source")
+            .join(cleaned.where(col("n_before") - col("n_removed") > 0)
+              .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
+            .select("doc_id", "text", "source")
+          (rewritten, Some(cut),
+            Some(cleaned.select(col("doc_id"),
+              (col("n_before") - col("n_removed")).as("__cn"))))
+      }
+      // optional DSIR selection against the PINNED model (between decon
+      // and the budget gate, mirroring the batch capstone): raw-source
+      // docs keep only on w_milli > 0; the target source passes its own
+      // gate by definition. A featureless doc emits no weight row and is
+      // cut — the scoreWeightsBucketed zero-backfill convention.
+      val (kept3, dsirCut) = dsir match {
+        case None => (kept3all, kept3all.select("doc_id").where(lit(false)))
+        case Some(p) =>
+          val raw = kept3all.where(col("source") =!= p.targetSource)
+          val keptW = Dsir.scoreWeightsStream(p.ratios, p.r0Milli,
+              p.hexChars, raw.select("doc_id", "text"))
+            .where(col("w_milli") > 0).select("doc_id")
+          val cut = raw.select("doc_id")
+            .join(keptW, Seq("doc_id"), "left_anti").localCheckpoint()
+          (kept3all.join(cut, Seq("doc_id"), "left_anti"), cut)
+      }
+      // budget gate: within-batch grouped prefix + per-source spend
+      // carried from the committed manifests (one tiny entry per batch —
+      // a restarted stream resumes the ledger without scanning the sink)
+      // pinned before the prefix (its three passes re-evaluate lineage —
+      // unpinned, the gate+probe chain above would run once per pass;
+      // same boundary as the batch CorpusBuild)
+      val toks = kept3.select(col("doc_id"), col("source"),
+        graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
+          .as("n"),
+        md5(col("doc_id").cast("string").cast("binary")).as("__hx"))
+        .localCheckpoint()
+      val withCum = Ops.withGroupedRunningSum(toks, col("source"),
+        Seq(col("__hx"), col("doc_id")),
+        expr("conv(substr(__hx, 1, 13), 16, 10)").cast("double"),
+        col("n"), "__cum",
+        leadingBounds = Some(Ops.md5PrefixBounds()))
+      // the carried spend is the PREFIX total — kept AND budget-cut
+      // tokens — because the batch form's rule is "keep while the
+      // running total fits", not a knapsack: once a source's cum passes
+      // its budget, later (larger-hash) docs stay cut even if their own
+      // tokens would fit. Counting only kept tokens here would quietly
+      // re-admit them and diverge from the window oracle.
+      val spentMap = committed.flatMap(_.spend).groupBy(_._1)
+        .view.mapValues(_.map(_._2).sum).toMap
+      val spent =
+        if (spentMap.isEmpty)
+          budgets.select(col("source"), lit(0L).as("__used")).where(lit(false))
+        else spark.createDataFrame(spentMap.toSeq).toDF("source", "__used")
+      // pinned: kept/over-budget both read it, and the prefix chain
+      // should run once per batch, not twice
+      val budgeted = withCum.join(broadcast(budgets), "source")
+        .join(broadcast(spent), Seq("source"), "left")
+        .withColumn("__used", coalesce(col("__used"), lit(0L)))
+        .localCheckpoint()
+      val keptFinal = budgeted
+        .where(col("__cum") + col("__used") <= col("budget"))
+        .select("doc_id", "source", "n")
+      val overBudget = budgeted
+        .where(col("__cum") + col("__used") > col("budget"))
+        .select("doc_id")
+      // attribution rows for the whole batch, with (source, n) carried so
+      // the sink doubles as the corpus ledger; pinned — three consumers
+      // (the directory write, the spend delta, the index-append guard)
+      val meta0 = batch.select(col("doc_id"), col("source"),
+        graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
+          .as("n"))
+      // with the span stage on, the sink's ledger column carries the
+      // CLEANED count for every doc the cleaner saw — the spend deltas
+      // must sum the tokens the mixer actually budgeted
+      val meta = cleanedN.fold(meta0)(cn =>
+        meta0.join(cn, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("source"),
+            coalesce(col("__cn"), col("n")).as("n")))
+      val att = staged.where(col("cut_stage") =!= "kept")
+        .unionByName(crossDup.select(col("doc_id"),
+          lit("dedup").as("cut_stage")))
+        .unionByName(contam.select(col("doc_id"), lit("decon").as("cut_stage")))
+        .unionByName(spanCut.fold(
+          contam.select("doc_id").where(lit(false)))(identity)
+          .select(col("doc_id"), lit("spanclean").as("cut_stage")))
+        .unionByName(dsirCut.select(col("doc_id"),
+          lit("dsir").as("cut_stage")))
+        .unionByName(overBudget.select(col("doc_id"),
+          lit("budget").as("cut_stage")))
+        .unionByName(keptFinal.select(col("doc_id"),
+          lit("kept").as("cut_stage")))
+        .join(meta, "doc_id")
+        .select("doc_id", "source", "n", "cut_stage")
+        .localCheckpoint()
+      // batch directory overwrite: an uncommitted replay re-derives the
+      // identical frame, so partial output from a crash is simply
+      // replaced (and invisible to readSink until the manifest lands)
+      att.write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      // optional trainer-ready pack stage: the batch's KEPT docs FFD-pack
+      // into fixed-budget bins (the StreamingPacking kernel verbatim —
+      // densify the segment-sparse bin ids via the 3-pass rank over the
+      // DISTINCT bin table, shift by the committed bin total carried in
+      // the manifests). Bins close at batch end; a replayed uncommitted
+      // batch re-derives the identical pack rows (same kept set, same
+      // offset) and overwrites wholesale, invisible until the manifest
+      // lands — so the chained build+pack stays crash-replay
+      // deterministic end to end.
+      val nBins = packBinSize.fold(0L) { binSize =>
+        val binOffset = committed.map(_.bins).sum
+        val packed = BestFitPacking.packBestFit(
+            keptFinal.select(col("doc_id").as("item_id"),
+              col("n").as("n_tokens")), binSize)
+          .withColumnRenamed("bin_id", "__raw_bin")
+          .localCheckpoint() // two consumers: densify + join
+        val dense = Ops.withGlobalRowNumber(
+            packed.select("__raw_bin").distinct(),
+            Seq(col("__raw_bin")), col("__raw_bin").cast("double"), "__dn")
+          .localCheckpoint() // two consumers: join + bin count
+        val n = dense.count()
+        packed.join(dense, "__raw_bin")
+          .select(col("item_id").as("doc_id"), col("n_tokens"),
+            (col("__dn") - 1 + binOffset).cast("long").as("bin_id"))
+          .write.mode("overwrite").parquet(s"$sinkDir/packs/b$batchId")
+        n
+      }
+      // index append next-to-last: the new fingerprints' keepers are the
+      // curation survivors that beat the index (kept2) — including those
+      // later cut at decon/budget, because the batch form's keeper groups
+      // are decided BEFORE decontamination. Guarded by a bucket-local
+      // SELF-probe (did a crashed replay already append exactly this
+      // (fp, doc_id)?) — O(batch), never an index rescan.
+      IndexStore.appendExactIndex(
+        BatchManifest.notYetIndexed(spark, kept2, "doc_id",
+          IndexStore.exactFingerprint(col("text")), table)
+          .select("doc_id", "text"),
+        "doc_id", "text", table)
+      IndexStore.autoCompact(spark, "exact", table)
+      // the commit's entry carries this batch's per-source spend delta,
+      // so the next batch's ledger is a tiny fold, not a sink aggregation
+      val delta = att.where(col("cut_stage").isin("kept", "budget"))
+        .groupBy("source").agg(sum(col("n")).as("d"))
+        .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}") ++
+        packBinSize.map(_ => s"__bins\t$nBins")
+      delta.mkString("\n")
     }
-    // optional DSIR selection against the PINNED model (between decon
-    // and the budget gate, mirroring the batch capstone): raw-source
-    // docs keep only on w_milli > 0; the target source passes its own
-    // gate by definition. A featureless doc emits no weight row and is
-    // cut — the scoreWeightsBucketed zero-backfill convention.
-    val (kept3, dsirCut) = dsir match {
-      case None => (kept3all, kept3all.select("doc_id").where(lit(false)))
-      case Some(p) =>
-        val raw = kept3all.where(col("source") =!= p.targetSource)
-        val keptW = Dsir.scoreWeightsStream(p.ratios, p.r0Milli,
-            p.hexChars, raw.select("doc_id", "text"))
-          .where(col("w_milli") > 0).select("doc_id")
-        val cut = raw.select("doc_id")
-          .join(keptW, Seq("doc_id"), "left_anti").localCheckpoint()
-        (kept3all.join(cut, Seq("doc_id"), "left_anti"), cut)
-    }
-    // budget gate: within-batch grouped prefix + per-source spend
-    // carried from the committed manifests (one tiny entry per batch —
-    // a restarted stream resumes the ledger without scanning the sink)
-    // pinned before the prefix (its three passes re-evaluate lineage —
-    // unpinned, the gate+probe chain above would run once per pass;
-    // same boundary as the batch CorpusBuild)
-    val toks = kept3.select(col("doc_id"), col("source"),
-      graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
-        .as("n"),
-      md5(col("doc_id").cast("string").cast("binary")).as("__hx"))
-      .localCheckpoint()
-    val withCum = Ops.withGroupedRunningSum(toks, col("source"),
-      Seq(col("__hx"), col("doc_id")),
-      expr("conv(substr(__hx, 1, 13), 16, 10)").cast("double"),
-      col("n"), "__cum",
-      leadingBounds = Some(Ops.md5PrefixBounds()))
-    // the carried spend is the PREFIX total — kept AND budget-cut
-    // tokens — because the batch form's rule is "keep while the
-    // running total fits", not a knapsack: once a source's cum passes
-    // its budget, later (larger-hash) docs stay cut even if their own
-    // tokens would fit. Counting only kept tokens here would quietly
-    // re-admit them and diverge from the window oracle.
-    val spentMap = committed.flatMap(_.spend).groupBy(_._1)
-      .view.mapValues(_.map(_._2).sum).toMap
-    val spent =
-      if (spentMap.isEmpty)
-        budgets.select(col("source"), lit(0L).as("__used")).where(lit(false))
-      else spark.createDataFrame(spentMap.toSeq).toDF("source", "__used")
-    // pinned: kept/over-budget both read it, and the prefix chain
-    // should run once per batch, not twice
-    val budgeted = withCum.join(broadcast(budgets), "source")
-      .join(broadcast(spent), Seq("source"), "left")
-      .withColumn("__used", coalesce(col("__used"), lit(0L)))
-      .localCheckpoint()
-    val keptFinal = budgeted
-      .where(col("__cum") + col("__used") <= col("budget"))
-      .select("doc_id", "source", "n")
-    val overBudget = budgeted
-      .where(col("__cum") + col("__used") > col("budget"))
-      .select("doc_id")
-    // attribution rows for the whole batch, with (source, n) carried so
-    // the sink doubles as the corpus ledger; pinned — three consumers
-    // (the directory write, the spend delta, the index-append guard)
-    val meta0 = batch.select(col("doc_id"), col("source"),
-      graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
-        .as("n"))
-    // with the span stage on, the sink's ledger column carries the
-    // CLEANED count for every doc the cleaner saw — the spend deltas
-    // must sum the tokens the mixer actually budgeted
-    val meta = cleanedN.fold(meta0)(cn =>
-      meta0.join(cn, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("__cn"), col("n")).as("n")))
-    val att = staged.where(col("cut_stage") =!= "kept")
-      .unionByName(crossDup.select(col("doc_id"),
-        lit("dedup").as("cut_stage")))
-      .unionByName(contam.select(col("doc_id"), lit("decon").as("cut_stage")))
-      .unionByName(spanCut.fold(
-        contam.select("doc_id").where(lit(false)))(identity)
-        .select(col("doc_id"), lit("spanclean").as("cut_stage")))
-      .unionByName(dsirCut.select(col("doc_id"),
-        lit("dsir").as("cut_stage")))
-      .unionByName(overBudget.select(col("doc_id"),
-        lit("budget").as("cut_stage")))
-      .unionByName(keptFinal.select(col("doc_id"),
-        lit("kept").as("cut_stage")))
-      .join(meta, "doc_id")
-      .select("doc_id", "source", "n", "cut_stage")
-      .localCheckpoint()
-    // batch directory overwrite: an uncommitted replay re-derives the
-    // identical frame, so partial output from a crash is simply
-    // replaced (and invisible to readSink until the manifest lands)
-    att.write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    // optional trainer-ready pack stage: the batch's KEPT docs FFD-pack
-    // into fixed-budget bins (the StreamingPacking kernel verbatim —
-    // densify the segment-sparse bin ids via the 3-pass rank over the
-    // DISTINCT bin table, shift by the committed bin total carried in
-    // the manifests). Bins close at batch end; a replayed uncommitted
-    // batch re-derives the identical pack rows (same kept set, same
-    // offset) and overwrites wholesale, invisible until the manifest
-    // lands — so the chained build+pack stays crash-replay
-    // deterministic end to end.
-    val nBins = packBinSize.fold(0L) { binSize =>
-      val binOffset = committed.map(_.bins).sum
-      val packed = BestFitPacking.packBestFit(
-          keptFinal.select(col("doc_id").as("item_id"),
-            col("n").as("n_tokens")), binSize)
-        .withColumnRenamed("bin_id", "__raw_bin")
-        .localCheckpoint() // two consumers: densify + join
-      val dense = Ops.withGlobalRowNumber(
-          packed.select("__raw_bin").distinct(),
-          Seq(col("__raw_bin")), col("__raw_bin").cast("double"), "__dn")
-        .localCheckpoint() // two consumers: join + bin count
-      val n = dense.count()
-      packed.join(dense, "__raw_bin")
-        .select(col("item_id").as("doc_id"), col("n_tokens"),
-          (col("__dn") - 1 + binOffset).cast("long").as("bin_id"))
-        .write.mode("overwrite").parquet(s"$sinkDir/packs/b$batchId")
-      n
-    }
-    // index append next-to-last: the new fingerprints' keepers are the
-    // curation survivors that beat the index (kept2) — including those
-    // later cut at decon/budget, because the batch form's keeper groups
-    // are decided BEFORE decontamination. Guarded by a bucket-local
-    // SELF-probe (did a crashed replay already append exactly this
-    // (fp, doc_id)?): the index side stays put in its fp buckets, only
-    // the batch-sized probe moves — O(batch), never an index rescan.
-    val kfps = kept2.select(col("doc_id").as("query_id"),
-      IndexStore.exactFingerprint(col("text")).as("fp"))
-    val alreadyIndexed = spark.table(s"${table}_fps")
-      .select(col("doc_id").as("__ix_id"), col("fp"))
-      .join(kfps, "fp")
-      .where(col("__ix_id") === col("query_id"))
-      .select(col("query_id").as("doc_id"))
-    IndexStore.appendExactIndex(
-      kept2.join(alreadyIndexed, Seq("doc_id"), "left_anti")
-        .select("doc_id", "text"),
-      "doc_id", "text", table)
-    IndexStore.autoCompact(spark, "exact", table)
-    // manifest commit LAST (atomic rename): the entry carries this
-    // batch's per-source spend delta, so the next batch's ledger is a
-    // tiny fold, not a sink aggregation
-    val delta = att.where(col("cut_stage").isin("kept", "budget"))
-      .groupBy("source").agg(sum(col("n")).as("d"))
-      .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}") ++
-      packBinSize.map(_ => s"__bins\t$nBins")
-    BatchManifest.commit(sinkDir, batchId, delta.mkString("\n"))
-  }
 }

@@ -20,9 +20,8 @@ import graft.operators.{IndexStore, SpanDedup}
   * the SAME SQL as ext_crossdoc_clean.
   *
   * The span merge is a (non-time) window, which Structured Streaming
-  * forbids on a streaming frame — hence foreachBatch with the
-  * [[StreamingPacking]] manifest protocol: per-batch directories,
-  * atomic one-line commits, replay overwrites byte-identically
+  * forbids on a streaming frame — hence foreachBatch under the
+  * [[BatchManifest]] protocol; a replay overwrites byte-identically
   * (decisions are pure functions of the doc and the frozen index).
   */
 object StreamingCrossDoc {
@@ -44,16 +43,8 @@ object StreamingCrossDoc {
     val srcDir = s"$workDir/src"
     val sinkDir = s"$workDir/sink"
     docs.repartition(2).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cleanBatch(batch, batchId, table, sinkDir)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BatchManifest.drain(spark, srcDir, s"$workDir/ckpt")(
+      cleanBatch(_, _, table, sinkDir))
     readSink(spark, sinkDir).orderBy("doc_id")
   }
 
@@ -67,12 +58,11 @@ object StreamingCrossDoc {
   /** One micro-batch: probe the frozen index, cut the flagged spans,
     * commit atomically. Exposed for the replay drill in StreamingSpec. */
   def cleanBatch(batch: DataFrame, batchId: Long, table: String,
-      sinkDir: String): Unit = {
-    val spark = batch.sparkSession // session coherence (StreamingCuration)
-    if (BatchManifest.committedIds(sinkDir).contains(batchId)) return
-    SpanDedup.cleanedDocsWith(batch,
-        IndexStore.removalSpansFromIndex(spark, table, batch))
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    BatchManifest.commit(sinkDir, batchId)
-  }
+      sinkDir: String): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { _ =>
+      SpanDedup.cleanedDocsWith(batch, IndexStore.removalSpansFromIndex(
+          batch.sparkSession, table, batch))
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      ""
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -75,15 +75,6 @@ object StreamingCuration {
     val sinkDir = s"$workDir/sink"
     Seq(srcDir, sinkDir, s"$workDir/ckpt").foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    new java.io.File(srcDir).mkdirs()
-
-    val q = spark.readStream.schema(crawl.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(batch, batchId, model, thr, table, sinkDir)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
     // Stage batches in doc_id-RANGE order, so arrival order equals id
     // order and the stream's first-arriving keeper coincides with the
     // oracle's min-id keeper for EVERY duplicate group — planted or
@@ -95,15 +86,11 @@ object StreamingCuration {
     // so index-gate acceptance is exercised across arrivals too.
     val median = crawl.where(col("doc_id") < 100000)
       .stat.approxQuantile("doc_id", Array(0.5), 0.0).head.toLong
-    val ranges = Seq[Column => Column](
-      id => id <= median,
-      id => id > median && id < 100000,
-      id => id >= 100000)
-    try ranges.foreach { pred =>
-      crawl.where(pred(col("doc_id")))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    val id = col("doc_id")
+    BatchManifest.drainEach(spark, srcDir, s"$workDir/ckpt",
+      Seq(id <= median, id > median && id < 100000, id >= 100000)
+        .map(p => crawl.where(p)))(
+      curateBatch(_, _, model, thr, table, sinkDir))
     readSink(spark, sinkDir).orderBy("doc_id")
   }
 
@@ -116,79 +103,54 @@ object StreamingCuration {
         col("id").as("h_milli_tok")))
 
   /** One micro-batch of the loop: gates → dedup-CHECK against the
-    * index → per-batch sink directory → guarded index append → atomic
-    * manifest commit, in exactly that order (the StreamingPacking
-    * protocol — replay safety costs ZERO history reads). A replayed
-    * COMMITTED batch short-circuits on its manifest entry. A replayed
-    * UNCOMMITTED batch re-derives the identical accepted set — the
-    * index probes self-id-filter, so even a replay whose index append
-    * DID run sees the same decisions (its own fingerprints match only
-    * themselves; a duplicate-group copy is cut by the index instead of
-    * the within-batch keeper rule, the same verdict) — and overwrites
-    * its directory wholesale, invisible to readers until the manifest
-    * lands. The index append is guarded by a bucket-local SELF-probe
-    * (did a crashed replay already append exactly this (fp, doc_id)?),
-    * so the fingerprint table is exactly-once too: the index side
-    * stays put in its fp buckets, only the batch-sized probe moves.
-    *
-    * SESSION COHERENCE: every catalog read in here goes through
-    * `batch.sparkSession`, NOT the enclosing stream's outer session.
-    * foreachBatch hands batches bound to the stream's cloned session,
-    * so the index appends (which run on the frames' own session)
-    * invalidate only THAT session's table-relation cache — a probe
-    * through the outer session would keep serving the file listing it
-    * cached on first use and silently miss every fingerprint accepted
-    * by earlier micro-batches (observed: cross-batch duplicates
-    * sailing through the gate). One session for probe + append keeps
-    * the loop read-your-writes. */
+    * index → per-batch sink directory → guarded index append → commit,
+    * in exactly that order (the [[BatchManifest]] protocol — replay
+    * safety costs ZERO history reads). A replayed UNCOMMITTED batch
+    * re-derives the identical accepted set — the index probes
+    * self-id-filter, so even a replay whose index append DID run sees
+    * the same decisions (its own fingerprints match only themselves; a
+    * duplicate-group copy is cut by the index instead of the
+    * within-batch keeper rule, the same verdict). */
   def curateBatch(batch: DataFrame, batchId: Long,
       model: NgramLm.Model, thr: Long, table: String,
-      sinkDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (BatchManifest.committedIds(sinkDir).contains(batchId)) return
-    val feat = batch.select(col("doc_id"), col("text"),
-      TextAnalysis.langId(col("text")).as("lang_pred"),
-      TextAnalysis.qualityScore(col("text")).as("quality"))
-    val kept = feat
-      .join(NgramLm.scoreMicroBits(model, batch)
-        .select("doc_id", "h_milli_tok"), "doc_id")
-      .where(col("lang_pred") === "en" && col("quality") >= 0.45 &&
-        col("h_milli_tok") <= thr)
-      .localCheckpoint()
-    // dedup CHECK only — no side effects yet
-    val matches = IndexStore.probeExact(spark,
-      kept.select("doc_id", "text"), "doc_id", "text", table)
-    val vsIndex = kept.join(
-      matches.select(col("query_id").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-    // within-batch keeper via groupBy(min) + join, the repo's
-    // hot-fingerprint doctrine (fineWebPipeline, ext_ccnet): a
-    // per-fingerprint window would funnel a hot boilerplate
-    // fingerprint's copies through one window partition
-    val fped = vsIndex
-      .withColumn("__fp", IndexStore.exactFingerprint(col("text")))
-    val keeper = fped
-      .join(fped.groupBy("__fp").agg(min(col("doc_id")).as("__keep")),
-        "__fp")
-      .where(col("doc_id") === col("__keep"))
-      .drop("__fp", "__keep")
-      .localCheckpoint()
-    keeper.select("doc_id", "lang_pred", "quality", "h_milli_tok")
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    // index append guarded by the bucket-local self-probe: a crashed
-    // replay whose append already ran must not double-add fingerprints
-    val kfps = keeper.select(col("doc_id").as("query_id"),
-      IndexStore.exactFingerprint(col("text")).as("fp"))
-    val alreadyIndexed = spark.table(s"${table}_fps")
-      .select(col("doc_id").as("__ix_id"), col("fp"))
-      .join(kfps, "fp")
-      .where(col("__ix_id") === col("query_id"))
-      .select(col("query_id").as("doc_id"))
-    IndexStore.appendExactIndex(
-      keeper.join(alreadyIndexed, Seq("doc_id"), "left_anti")
-        .select("doc_id", "text"),
-      "doc_id", "text", table)
-    IndexStore.autoCompact(spark, "exact", table)
-    BatchManifest.commit(sinkDir, batchId)
-  }
+      sinkDir: String): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { _ =>
+      val spark = batch.sparkSession
+      val feat = batch.select(col("doc_id"), col("text"),
+        TextAnalysis.langId(col("text")).as("lang_pred"),
+        TextAnalysis.qualityScore(col("text")).as("quality"))
+      val kept = feat
+        .join(NgramLm.scoreMicroBits(model, batch)
+          .select("doc_id", "h_milli_tok"), "doc_id")
+        .where(col("lang_pred") === "en" && col("quality") >= 0.45 &&
+          col("h_milli_tok") <= thr)
+        .localCheckpoint()
+      // dedup CHECK only — no side effects yet
+      val matches = IndexStore.probeExact(spark,
+        kept.select("doc_id", "text"), "doc_id", "text", table)
+      val vsIndex = kept.join(
+        matches.select(col("query_id").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+      // within-batch keeper via groupBy(min) + join, the repo's
+      // hot-fingerprint doctrine (fineWebPipeline, ext_ccnet): a
+      // per-fingerprint window would funnel a hot boilerplate
+      // fingerprint's copies through one window partition
+      val fped = vsIndex
+        .withColumn("__fp", IndexStore.exactFingerprint(col("text")))
+      val keeper = fped
+        .join(fped.groupBy("__fp").agg(min(col("doc_id")).as("__keep")),
+          "__fp")
+        .where(col("doc_id") === col("__keep"))
+        .drop("__fp", "__keep")
+        .localCheckpoint()
+      keeper.select("doc_id", "lang_pred", "quality", "h_milli_tok")
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      IndexStore.appendExactIndex(
+        BatchManifest.notYetIndexed(spark, keeper, "doc_id",
+          IndexStore.exactFingerprint(col("text")), table)
+          .select("doc_id", "text"),
+        "doc_id", "text", table)
+      IndexStore.autoCompact(spark, "exact", table)
+      ""
+    }
 }

@@ -35,13 +35,7 @@ object StreamingDedup {
       .repartitionByRange(2, col("event_id"))
       .write.mode("overwrite").parquet(srcDir)
 
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .as[Ev]
-
-    val deduped = stream
+    def improvements(events: DataFrame): DataFrame = events.as[Ev]
       .groupByKey(e => (e.user_id, e.event_type))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: (Long, String), rows: Iterator[Ev], state: GroupState[Long]) =>
@@ -52,15 +46,9 @@ object StreamingDedup {
             Iterator.single(batchBest)
           } else Iterator.empty
       }
-
-    val name = s"graft_dedup_${System.nanoTime()}"
-    val q = deduped.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", s"$workDir/ckpt_${System.nanoTime()}")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .toDF()
     // the sink holds every improvement; the champion is the final min
-    spark.table(name)
+    BatchManifest.drainToMemory(spark, srcDir, "append")(improvements)
       .groupBy("user_id", "event_type")
       .agg(min(col("event_id")).as("event_id"))
       .select("event_id", "user_id", "event_type")

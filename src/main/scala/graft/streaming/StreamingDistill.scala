@@ -43,26 +43,14 @@ object StreamingDistill {
 
     val srcDir = s"$workDir/src_${System.nanoTime()}"
     corpus.repartition(2).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-
-    val scored = Distill.score(
-        stream.select(col("doc_id"),
-          Distill.featureBuckets(col("text")).as("buckets"),
-          QualityRules.gopherPassColumn(col("text")).cast("int")
-            .as("teacher_pass")),
-        "buckets", w)
-      .select("doc_id", "z_micro", "student_pass", "teacher_pass")
-
-    val name = s"graft_distill_${System.nanoTime()}"
-    val q = scored.writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-    }
-    spark.table(name).orderBy("doc_id")
+    BatchManifest.drainToMemory(spark, srcDir, "append") { stream =>
+      Distill.score(
+          stream.select(col("doc_id"),
+            Distill.featureBuckets(col("text")).as("buckets"),
+            QualityRules.gopherPassColumn(col("text")).cast("int")
+              .as("teacher_pass")),
+          "buckets", w)
+        .select("doc_id", "z_micro", "student_pass", "teacher_pass")
+    }.orderBy("doc_id")
   }
 }

@@ -35,20 +35,9 @@ object StreamingDsir {
     val srcDir = s"$workDir/src_${System.nanoTime()}"
     docs.where(col("source") =!= "src0").select("doc_id", "text")
       .repartition(2).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-
-    val name = s"graft_dsir_score_${System.nanoTime()}"
-    val q = Dsir.scoreWeightsStream(ratios, r0, model.hexChars, stream)
-      .where(col("w_milli") > 0)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-    }
-    spark.table(name).orderBy("doc_id")
+    BatchManifest.drainToMemory(spark, srcDir, "complete")(stream =>
+      Dsir.scoreWeightsStream(ratios, r0, model.hexChars, stream)
+        .where(col("w_milli") > 0))
+      .orderBy("doc_id")
   }
 }

@@ -32,20 +32,25 @@ object StreamingIndexIngest {
     idxTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxPath))
 
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        buildOrAppend(batch, !spark.catalog.tableExists(idxTables.head),
-          batchId)
-        (): Unit
-      }
-      .option("checkpointLocation", s"$workDir/ckpt_${System.nanoTime()}")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BatchManifest.drainOnce(spark, srcDir, workDir) { (batch, batchId) =>
+      buildOrAppend(batch, !spark.catalog.tableExists(idxTables.head), batchId)
+    }
     probe()
   }
+
+  /** The usual per-batch step of an instance: `build` on the first
+    * batch; otherwise `append`, then `kind`'s counter-driven
+    * auto-compaction folds the appends back (content-neutral). */
+  private def growing(spark: SparkSession, kind: String, table: String,
+      autoCompactAppends: Int)(build: (DataFrame, Long) => Unit,
+      append: (DataFrame, Long) => Unit): (DataFrame, Boolean, Long) => Unit =
+    (batch, first, batchId) =>
+      if (first) build(batch, batchId)
+      else {
+        append(batch, batchId)
+        IndexStore.autoCompact(spark, kind, table, autoCompactAppends)
+        (): Unit
+      }
 
   /** Document-corpus instance of [[ingestFrames]]: probes the finished
     * index with planted perturbed docs. */
@@ -73,14 +78,11 @@ object StreamingIndexIngest {
       : DataFrame =
     ingest(spark, sfDir, workDir,
       Seq(s"${table}_bands", s"${table}_shingles"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildMinhashIndex(batch, "doc_id", "text",
-          table, idxPath)
-        else {
-          IndexStore.appendMinhashIndex(batch, "doc_id", "text", table)
-          IndexStore.autoCompact(spark, "minhash", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "minhash", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildMinhashIndex(batch, "doc_id", "text",
+          table, idxPath),
+        (batch, _) =>
+          IndexStore.appendMinhashIndex(batch, "doc_id", "text", table)),
       probes => IndexStore.probeMinhash(spark, probes, "doc_id", "text", table)
         .orderBy("query_id", "match_id"))
 
@@ -90,14 +92,11 @@ object StreamingIndexIngest {
       autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends)
       : DataFrame =
     ingest(spark, sfDir, workDir, Seq(s"${table}_chunks"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildSimhashIndex(batch, "doc_id", "text",
-          table, idxPath)
-        else {
-          IndexStore.appendSimhashIndex(batch, "doc_id", "text", table)
-          IndexStore.autoCompact(spark, "simhash", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "simhash", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildSimhashIndex(batch, "doc_id", "text",
+          table, idxPath),
+        (batch, _) =>
+          IndexStore.appendSimhashIndex(batch, "doc_id", "text", table)),
       probes => IndexStore.probeSimhash(spark, probes, "doc_id", "text", table)
         .orderBy("query_id", "match_id"))
 
@@ -160,14 +159,11 @@ object StreamingIndexIngest {
       autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends)
       : DataFrame =
     ingest(spark, sfDir, workDir, Seq(s"${table}_wins"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildWinnowIndex(batch, "doc_id", "text",
-          table, idxPath)
-        else {
-          IndexStore.appendWinnowIndex(batch, "doc_id", "text", table)
-          IndexStore.autoCompact(spark, "winnow", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "winnow", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildWinnowIndex(batch, "doc_id", "text",
+          table, idxPath),
+        (batch, _) =>
+          IndexStore.appendWinnowIndex(batch, "doc_id", "text", table)),
       probes => IndexStore.probeWinnow(spark, probes, "doc_id", "text",
           table)
         .orderBy("query_id", "match_id"))
@@ -191,15 +187,13 @@ object StreamingIndexIngest {
       .select("doc_id", "text")
     ingestFrames(spark, docs.where(col("doc_id") % 10 < 8), workDir,
       Seq(s"${table}_counts"), idxPath,
-      (batch, first, batchId) =>
-        if (first) IndexStore.buildLmIndexKeyed(batch, "doc_id", "text",
-          table, idxPath, batchKey = batchId)
-        else {
+      growing(spark, "lmk", table, autoCompactAppends)(
+        (batch, batchId) =>
+          IndexStore.buildLmIndexKeyed(batch, "doc_id", "text",
+          table, idxPath, batchKey = batchId),
+        (batch, batchId) =>
           IndexStore.appendLmIndexKeyed(batch, "doc_id", "text", table,
-            batchId)
-          IndexStore.autoCompact(spark, "lmk", table, autoCompactAppends)
-          (): Unit
-        },
+          batchId)),
       () => IndexStore.scoreFromLmIndexKeyed(spark, table,
           docs.where(col("doc_id") % 10 >= 8))
         .orderBy("doc_id"))
@@ -222,16 +216,12 @@ object StreamingIndexIngest {
       .select("doc_id", "text", "source")
     ingestFrames(spark, docs.where(col("doc_id") % 10 < 8), workDir,
       Seq(s"${table}_dmc"), idxPath,
-      (batch, first, batchId) =>
-        if (first) IndexStore.buildDoremiIndexKeyed(batch, "doc_id",
-          "source", "text", table, idxPath, batchKey = batchId)
-        else {
+      growing(spark, "doremik", table, autoCompactAppends)(
+        (batch, batchId) => IndexStore.buildDoremiIndexKeyed(batch, "doc_id",
+          "source", "text", table, idxPath, batchKey = batchId),
+        (batch, batchId) =>
           IndexStore.appendDoremiIndexKeyed(batch, "doc_id", "source",
-            "text", table, batchId)
-          IndexStore.autoCompact(spark, "doremik", table,
-            autoCompactAppends)
-          (): Unit
-        },
+          "text", table, batchId)),
       () => IndexStore.doremiWeightsFromIndexKeyed(spark, table)
         .select("source", "n_bigrams", "ref_milli", "own_milli",
           "excess_milli", "w_micro")
@@ -394,81 +384,20 @@ object StreamingIndexIngest {
   def runGateStream(spark: SparkSession, srcDir: String, sinkDir: String,
       checkpointDir: String, exactTable: String, winnowTable: String,
       minhashTable: String,
-      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // check → per-batch sink dir → guarded appends → atomic
-        // manifest commit (the BatchManifest protocol — replay safety
-        // costs zero history reads). A committed replay short-circuits;
-        // an uncommitted one re-derives IDENTICAL decisions even when
-        // its appends already ran (every probe self-id-filters, and a
-        // duplicate-group copy cut within-batch on the first run is cut
-        // by the index on the replay — same first gate, because the
-        // index gained only this batch's keepers, whose matches the
-        // within-batch rule already counted). Appends run exact LAST
-        // with a bucket-local self-probe guard: "in the exact index"
-        // therefore means ALL kinds completed, so a replay re-appends
-        // only winnow/minhash rows for docs whose exact append never
-        // landed — bounded duplication that probes can't see
-        // (countDistinct + self-filters), never a completeness loss.
-        // All catalog reads go through batch.sparkSession (the
-        // stream's clone — the session the appends run on), keeping
-        // the probe read-your-writes across micro-batches; the outer
-        // session's table-relation cache never learns about
-        // clone-side appends (see StreamingCuration.curateBatch).
-        val bs = batch.sparkSession
-        if (!BatchManifest.committedIds(sinkDir).contains(batchId)) {
-          val (accepted, decisions) = IndexStore.dedupIngestGateCheck(
-            bs, batch, "doc_id", "text", exactTable, winnowTable,
-            minhashTable, window = 40, guarantee = 10)
-          // `accepted` is already pinned pre-append (the check's last
-          // stage), so it feeds the sink and the appends directly
-          decisions
-            .unionByName(accepted.select(col("doc_id"),
-              lit("accepted").as("gate")))
-            .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-          val kfps = accepted.select(col("doc_id").as("query_id"),
-            IndexStore.exactFingerprint(col("text")).as("fp"))
-          val alreadyIndexed = bs.table(s"${exactTable}_fps")
-            .select(col("doc_id").as("__ix_id"), col("fp"))
-            .join(kfps, "fp")
-            .where(col("__ix_id") === col("query_id"))
-            .select(col("query_id").as("doc_id"))
-          val toAppend = accepted
-            .join(alreadyIndexed, Seq("doc_id"), "left_anti")
-            .localCheckpoint() // three consumers below
-          // winnow+minhash overlap (independent tables, one pinned
-          // source — Ops.concurrently); exact stays LAST alone, because
-          // "in the exact index" must keep meaning ALL kinds completed
-          Ops.concurrently(
-            () => IndexStore.appendWinnowIndex(toAppend, "doc_id", "text",
-              winnowTable, window = 40, guarantee = 10),
-            () => IndexStore.appendMinhashIndex(toAppend, "doc_id", "text",
-              minhashTable))
-          IndexStore.appendExactIndex(toAppend, "doc_id", "text",
-            exactTable)
-          IndexStore.autoCompact(bs, "winnow", winnowTable,
-            autoCompactAppends)
-          IndexStore.autoCompact(bs, "minhash", minhashTable,
-            autoCompactAppends)
-          IndexStore.autoCompact(bs, "exact", exactTable,
-            autoCompactAppends)
-          BatchManifest.commit(sinkDir, batchId)
-          // every stage's accepted set (all reachable through
-          // `decisions`) and the append source are consumed: free their
-          // blocks now instead of leaving them to the context cleaner,
-          // which a long-lived stream may not run for many drains
-          Seq(decisions, toAppend).foreach(Ops.freeLogicalRddBlocks(_))
-        }
-        (): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit =
+    BatchManifest.gateDrain(spark, srcDir, sinkDir, checkpointDir,
+      batch => IndexStore.dedupIngestGateCheck(batch.sparkSession, batch,
+        "doc_id", "text", exactTable, winnowTable, minhashTable,
+        window = 40, guarantee = 10),
+      "doc_id", IndexStore.exactFingerprint(col("text")), exactTable,
+      (d => IndexStore.appendWinnowIndex(d, "doc_id", "text", winnowTable,
+          window = 40, guarantee = 10),
+        d => IndexStore.appendMinhashIndex(d, "doc_id", "text",
+          minhashTable)),
+      d => IndexStore.appendExactIndex(d, "doc_id", "text", exactTable),
+      Seq("winnow" -> winnowTable, "minhash" -> minhashTable,
+        "exact" -> exactTable),
+      autoCompactAppends)
 
   /** The committed gate sink — (id, gate) attribution rows; uncommitted
     * partial batch directories are invisible. */
@@ -485,26 +414,18 @@ object StreamingIndexIngest {
     * spec'd in StreamingSpec the same way the gate take-down is. */
   def runLmStream(spark: SparkSession, srcDir: String,
       checkpointDir: String, table: String, idxPath: String,
-      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!spark.catalog.tableExists(s"${table}_counts"))
-          IndexStore.buildLmIndexKeyed(batch, "doc_id", "text", table,
-            idxPath, batchKey = batchId)
-        else {
-          IndexStore.appendLmIndexKeyed(batch, "doc_id", "text", table,
-            batchId)
-          IndexStore.autoCompact(spark, "lmk", table, autoCompactAppends)
-          (): Unit
-        }
+      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit =
+    BatchManifest.drain(spark, srcDir, checkpointDir) { (batch, batchId) =>
+      if (!spark.catalog.tableExists(s"${table}_counts"))
+        IndexStore.buildLmIndexKeyed(batch, "doc_id", "text", table,
+          idxPath, batchKey = batchId)
+      else {
+        IndexStore.appendLmIndexKeyed(batch, "doc_id", "text", table,
+          batchId)
+        IndexStore.autoCompact(spark, "lmk", table, autoCompactAppends)
+        (): Unit
       }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+    }
 
   /** The EMBEDDING composed gate run as a stream — [[runGate]]'s twin
     * over the vec gate with all three slots live (exact-fingerprint →
@@ -617,58 +538,17 @@ object StreamingIndexIngest {
   def runGateVecStream(spark: SparkSession, srcDir: String,
       sinkDir: String, checkpointDir: String, exactTable: String,
       srpTable: String, ivfTable: String,
-      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same manifest protocol and append ordering as the text gate
-        // (exact-vec LAST behind its self-probe guard), and the same
-        // session-coherence rule: probe and append through
-        // batch.sparkSession so the clone's relation cache sees its
-        // own appends.
-        val bs = batch.sparkSession
-        if (!BatchManifest.committedIds(sinkDir).contains(batchId)) {
-          val (accepted, decisions) = IndexStore.dedupIngestGateVecCheck(
-            bs, batch, exactTable, srpTable, threshold = 0.9999,
-            ivfTable = Some(ivfTable), ivfThreshold = 0.999)
-          // already pinned pre-append, as in the text gate
-          decisions
-            .unionByName(accepted.select(col("vec_id"),
-              lit("accepted").as("gate")))
-            .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-          val kfps = accepted.select(col("vec_id").as("query_id"),
-            IndexStore.vecFingerprint(col("vec")).as("fp"))
-          val alreadyIndexed = bs.table(s"${exactTable}_fps")
-            .select(col("vec_id").as("__ix_id"), col("fp"))
-            .join(kfps, "fp")
-            .where(col("__ix_id") === col("query_id"))
-            .select(col("query_id").as("vec_id"))
-          val toAppend = accepted
-            .join(alreadyIndexed, Seq("vec_id"), "left_anti")
-            .localCheckpoint() // three consumers below
-          // srp+ivf overlap; exact-vec stays LAST (same contract as the
-          // text gate: its self-probe guard marks the batch complete)
-          Ops.concurrently(
-            () => IndexStore.appendSrpIndex(toAppend, srpTable),
-            () => IndexStore.appendIvfIndex(bs, toAppend, ivfTable))
-          IndexStore.appendExactVecIndex(toAppend, "vec_id", "vec",
-            exactTable)
-          IndexStore.autoCompact(bs, "srp", srpTable, autoCompactAppends)
-          IndexStore.autoCompact(bs, "ivf", ivfTable, autoCompactAppends)
-          IndexStore.autoCompact(bs, "exact", exactTable,
-            autoCompactAppends)
-          BatchManifest.commit(sinkDir, batchId)
-          // the same drain-end release as the text gate
-          Seq(decisions, toAppend).foreach(Ops.freeLogicalRddBlocks(_))
-        }
-        (): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      autoCompactAppends: Int = IndexStore.DefaultAutoCompactAppends): Unit =
+    BatchManifest.gateDrain(spark, srcDir, sinkDir, checkpointDir,
+      batch => IndexStore.dedupIngestGateVecCheck(batch.sparkSession, batch,
+        exactTable, srpTable, threshold = 0.9999,
+        ivfTable = Some(ivfTable), ivfThreshold = 0.999),
+      "vec_id", IndexStore.vecFingerprint(col("vec")), exactTable,
+      (d => IndexStore.appendSrpIndex(d, srpTable),
+        d => IndexStore.appendIvfIndex(d.sparkSession, d, ivfTable)),
+      d => IndexStore.appendExactVecIndex(d, "vec_id", "vec", exactTable),
+      Seq("srp" -> srpTable, "ivf" -> ivfTable, "exact" -> exactTable),
+      autoCompactAppends)
 
   /** SRP (embedding ANN) instance — [[ingestFrames]] over the
     * embeddings table instead of documents; the finished index answers
@@ -683,13 +563,9 @@ object StreamingIndexIngest {
         Similarity.toDoubleArray(col("embedding")).as("vec"))
     ingestFrames(spark, vecs, workDir,
       Seq(s"${table}_bands", s"${table}_vecs"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildSrpIndex(batch, table, idxPath)
-        else {
-          IndexStore.appendSrpIndex(batch, table)
-          IndexStore.autoCompact(spark, "srp", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "srp", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildSrpIndex(batch, table, idxPath),
+        (batch, _) => IndexStore.appendSrpIndex(batch, table)),
       () => IndexStore.probeSrp(spark, vecs.where(col("vec_id") < 10),
           table, k = 5)
         .orderBy("query_id", "rank"))
@@ -715,13 +591,9 @@ object StreamingIndexIngest {
         Similarity.toDoubleArray(col("embedding")).as("vec"))
     ingestFrames(spark, vecs, workDir,
       Seq(s"${table}_books", s"${table}_codes"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildPqIndex(batch, table, idxPath)
-        else {
-          IndexStore.appendPqIndex(batch, table)
-          IndexStore.autoCompact(spark, "pq", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "pq", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildPqIndex(batch, table, idxPath),
+        (batch, _) => IndexStore.appendPqIndex(batch, table)),
       () => IndexStore.probePqTopK(spark,
           vecs.where(col("vec_id") % 20 === 0)
             .select((col("vec_id") + 100000).as("vec_id"),
@@ -747,14 +619,11 @@ object StreamingIndexIngest {
     def itemsOf(d: DataFrame): DataFrame = d.select(col("lang"),
       explode(Dedup.wordShingles(col("text"))).as("item"))
     ingestFrames(spark, docs, workDir, Seq(s"${table}_hregs"), idxPath,
-      (batch, first, _) =>
-        if (first) IndexStore.buildHllIndex(itemsOf(batch), "lang",
-          "item", table, idxPath)
-        else {
-          IndexStore.appendHllIndex(itemsOf(batch), "lang", "item", table)
-          IndexStore.autoCompact(spark, "hll", table, autoCompactAppends)
-          (): Unit
-        },
+      growing(spark, "hll", table, autoCompactAppends)(
+        (batch, _) => IndexStore.buildHllIndex(itemsOf(batch), "lang",
+          "item", table, idxPath),
+        (batch, _) =>
+          IndexStore.appendHllIndex(itemsOf(batch), "lang", "item", table)),
       () => IndexStore.hllRegistersFromIndex(spark, table)
         .orderBy("grp", "idx"))
   }
@@ -776,15 +645,12 @@ object StreamingIndexIngest {
     def itemsOf(d: DataFrame): DataFrame = d.select(col("source"),
       explode(Dedup.wordShingles(col("text"))).as("item"))
     ingestFrames(spark, docs, workDir, Seq(s"${table}_cregs"), idxPath,
-      (batch, first, batchId) =>
-        if (first) IndexStore.buildCmsIndex(itemsOf(batch), "source",
-          "item", table, idxPath, batchKey = batchId)
-        else {
+      growing(spark, "cms", table, autoCompactAppends)(
+        (batch, batchId) => IndexStore.buildCmsIndex(itemsOf(batch), "source",
+          "item", table, idxPath, batchKey = batchId),
+        (batch, batchId) =>
           IndexStore.appendCmsIndex(itemsOf(batch), "source", "item",
-            table, batchId)
-          IndexStore.autoCompact(spark, "cms", table, autoCompactAppends)
-          (): Unit
-        },
+          table, batchId)),
       () => IndexStore.cmsRegistersFromIndex(spark, table)
         .orderBy("grp", "row_j", "idx"))
   }
@@ -805,15 +671,13 @@ object StreamingIndexIngest {
       graft.functions.TextAnalysis.tokenCount(col("text"))
         .cast("long").as("v"))
     ingestFrames(spark, docs, workDir, Seq(s"${table}_qregs"), idxPath,
-      (batch, first, batchId) =>
-        if (first) IndexStore.buildQhistIndex(metricOf(batch), "source",
-          "v", table, idxPath, batchKey = batchId)
-        else {
+      growing(spark, "qh", table, autoCompactAppends)(
+        (batch, batchId) =>
+          IndexStore.buildQhistIndex(metricOf(batch), "source",
+          "v", table, idxPath, batchKey = batchId),
+        (batch, batchId) =>
           IndexStore.appendQhistIndex(metricOf(batch), "source", "v",
-            table, batchId)
-          IndexStore.autoCompact(spark, "qh", table, autoCompactAppends)
-          (): Unit
-        },
+          table, batchId)),
       () => IndexStore.qhistRegistersFromIndex(spark, table)
         .orderBy("grp", "bucket"))
   }
@@ -833,15 +697,12 @@ object StreamingIndexIngest {
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text", "source")
     ingestFrames(spark, docs, workDir, Seq(s"${table}_aph"), idxPath,
-      (batch, first, batchId) =>
-        if (first) IndexStore.buildAuthorityIndex(batch, "source",
-          "doc_id", "text", table, idxPath, batchKey = batchId)
-        else {
+      growing(spark, "auth", table, autoCompactAppends)(
+        (batch, batchId) => IndexStore.buildAuthorityIndex(batch, "source",
+          "doc_id", "text", table, idxPath, batchKey = batchId),
+        (batch, batchId) =>
           IndexStore.appendAuthorityIndex(batch, "source", "doc_id",
-            "text", table, batchId)
-          IndexStore.autoCompact(spark, "auth", table, autoCompactAppends)
-          (): Unit
-        },
+          "text", table, batchId)),
       () => IndexStore.authorityFromIndex(spark, table)
         .orderBy("source"))
   }

@@ -44,19 +44,8 @@ object StreamingLmScore {
     val srcDir = s"$workDir/src_${System.nanoTime()}"
     docs.where(col("doc_id") % 10 >= 8)
       .repartition(2).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-
-    val name = s"graft_lm_score_${System.nanoTime()}"
-    val q = NgramLm.scoreBigramsWithVocab(stream, model, vsize)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-    }
-    spark.table(name).orderBy("doc_id")
+    BatchManifest.drainToMemory(spark, srcDir, "complete")(
+        NgramLm.scoreBigramsWithVocab(_, model, vsize))
+      .orderBy("doc_id")
   }
 }

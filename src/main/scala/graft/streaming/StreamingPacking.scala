@@ -1,8 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,13 +16,10 @@ import graft.operators.{BestFitPacking, Ops}
   * bounded — at most one under-half bin per FFD segment per batch, the
   * same tail the batch packer leaves per segment.
   *
-  * Commit protocol: the [[StreamingShards]] manifest discipline
-  * verbatim — each batch writes its own `b<id>/` directory, the
-  * one-line manifest entry (here holding the batch's BIN count, the
-  * continuation offset) renames into place atomically, readers union
-  * committed directories only, and a replayed uncommitted batch
-  * overwrites wholesale with the same offset, so the packing is
-  * bit-deterministic under crash-replay.
+  * Commits follow the [[BatchManifest]] protocol, each entry holding
+  * its batch's BIN count: the committed total is the next batch's bin
+  * offset, so a replayed uncommitted batch repacks with the same offset
+  * and the packing is bit-deterministic under crash-replay.
   */
 object StreamingPacking {
 
@@ -41,42 +36,18 @@ object StreamingPacking {
       .select(col("doc_id").as("item_id"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
           .as("n_tokens"))
-    new File(srcDir).mkdirs()
-
-    val q = spark.readStream.schema(items.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendPacked(spark, batch, batchId, sinkDir, binSize)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    try (0 until nBatches).foreach { k =>
-      items.where(col("item_id") % nBatches === k)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    BatchManifest.drainEach(spark, srcDir, s"$workDir/ckpt",
+      (0 until nBatches).map(k =>
+        items.where(col("item_id") % nBatches === k)))(
+      appendPacked(spark, _, _, sinkDir, binSize))
     readSink(spark, sinkDir).orderBy("item_id")
   }
 
-  private def committedBatches(sinkDir: String): Seq[(Long, Long)] = {
-    val dir = new File(s"$sinkDir/_manifest")
-    if (!dir.exists) Seq.empty
-    else dir.listFiles().toSeq
-      .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      .map(f => (f.getName.toLong, Files.readString(f.toPath).trim.toLong))
-      .sortBy(_._1)
-  }
-
   /** The committed sink (uncommitted partials invisible). */
-  def readSink(spark: SparkSession, sinkDir: String): DataFrame = {
-    val dirs = committedBatches(sinkDir).map { case (id, _) =>
-      s"$sinkDir/b$id"
-    }
-    if (dirs.isEmpty)
+  def readSink(spark: SparkSession, sinkDir: String): DataFrame =
+    BatchManifest.readCommitted(spark, sinkDir)(
       spark.range(0).select(col("id").as("item_id"),
-        col("id").as("n_tokens"), col("id").as("bin_id"))
-    else spark.read.parquet(dirs: _*)
-  }
+        col("id").as("n_tokens"), col("id").as("bin_id")))
 
   /** One micro-batch: FFD-pack the fresh items, DENSIFY the batch's
     * sparse segment-local bin ids (3-pass rank over the DISTINCT bin
@@ -85,37 +56,31 @@ object StreamingPacking {
     * no-op; an uncommitted one overwrites with identical content.
     * Exposed for the replay drill in StreamingSpec. */
   def appendPacked(spark: SparkSession, batch: DataFrame, batchId: Long,
-      sinkDir: String, binSize: Long): Unit = {
-    val committed = committedBatches(sinkDir)
-    if (committed.exists(_._1 == batchId)) return
-    val binOffset = committed.map(_._2).sum
-    // Cross-batch duplicate arrivals drop against the committed sink's
-    // pruned item_id column — the StreamingShards note applies: a
-    // deployment whose source re-delivers at scale would gate on the
-    // persisted exact-fingerprint index instead; this anti-join is the
-    // id-keyed form of the same check.
-    val existing = readSink(spark, sinkDir)
-    val fresh = (if (committed.isEmpty) batch
-      else batch.join(existing.select("item_id"), Seq("item_id"),
-        "left_anti"))
-      .localCheckpoint() // pin: the pack and the manifest count must agree
-    val packed = BestFitPacking.packBestFit(fresh, binSize)
-      .withColumnRenamed("bin_id", "__raw_bin")
-      .localCheckpoint() // two consumers: densify + join
-    val dense = Ops.withGlobalRowNumber(
-        packed.select("__raw_bin").distinct(),
-        Seq(col("__raw_bin")), col("__raw_bin").cast("double"), "__dn")
-      .localCheckpoint() // two consumers: join + bin count
-    val nBins = dense.count()
-    packed.join(dense, "__raw_bin")
-      .select(col("item_id"), col("n_tokens"),
-        (col("__dn") - 1 + binOffset).cast("long").as("bin_id"))
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    new File(s"$sinkDir/_manifest").mkdirs()
-    val tmp = Paths.get(s"$sinkDir/_manifest/.tmp-$batchId")
-    Files.write(tmp, nBins.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(s"$sinkDir/_manifest/$batchId"),
-      StandardCopyOption.ATOMIC_MOVE)
-    (): Unit
-  }
+      sinkDir: String, binSize: Long): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { committed =>
+      val binOffset = committed.map(_.content.trim.toLong).sum
+      // Cross-batch duplicate arrivals drop against the committed sink's
+      // pruned item_id column — the StreamingShards note applies: a
+      // deployment whose source re-delivers at scale would gate on the
+      // persisted exact-fingerprint index instead; this anti-join is the
+      // id-keyed form of the same check.
+      val existing = readSink(spark, sinkDir)
+      val fresh = (if (committed.isEmpty) batch
+        else batch.join(existing.select("item_id"), Seq("item_id"),
+          "left_anti"))
+        .localCheckpoint() // pin: the pack and the manifest count must agree
+      val packed = BestFitPacking.packBestFit(fresh, binSize)
+        .withColumnRenamed("bin_id", "__raw_bin")
+        .localCheckpoint() // two consumers: densify + join
+      val dense = Ops.withGlobalRowNumber(
+          packed.select("__raw_bin").distinct(),
+          Seq(col("__raw_bin")), col("__raw_bin").cast("double"), "__dn")
+        .localCheckpoint() // two consumers: join + bin count
+      val nBins = dense.count()
+      packed.join(dense, "__raw_bin")
+        .select(col("item_id"), col("n_tokens"),
+          (col("__dn") - 1 + binOffset).cast("long").as("bin_id"))
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      nBins.toString
+    }
 }

@@ -12,10 +12,8 @@ import graft.operators.IndexStore
   * (first-occurrence keeper) and against the PERSISTED line-fingerprint
   * index of every earlier batch; surviving lines append to the index,
   * cleaned documents land in per-batch sink directories under the
-  * [[StreamingPacking]] manifest protocol (atomic commits, replay a
-  * zero-history-read no-op, the index append guarded by a bucket-local
-  * self-probe so fingerprints stay exactly-once even when a crash
-  * lands between the append and the manifest).
+  * [[BatchManifest]] protocol, whose self-probe guards the index
+  * append.
   *
   * The line index REUSES the exact IndexStore kind wholesale — a line
   * is just a tiny document keyed by its (doc, line) position — so the
@@ -54,24 +52,12 @@ object StreamingParagraphDedup {
         col("doc_id").cast("string").as("pid"),
         col("text").as("para")),
       "pid", "para", table, idxPath)
-    val srcDir = s"$workDir/src"
-    new java.io.File(srcDir).mkdirs()
     val median = corpus.stat.approxQuantile("doc_id", Array(0.5), 0.0)
       .head.toLong
-    val q = spark.readStream.schema(corpus.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, table, s"$workDir/sink")
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    val ranges = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
-      id => id <= median, id => id > median)
-    try ranges.foreach { pred =>
-      corpus.where(pred(col("doc_id")))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    BatchManifest.drainEach(spark, s"$workDir/src", s"$workDir/ckpt",
+      Seq(corpus.where(col("doc_id") <= median),
+        corpus.where(col("doc_id") > median)))(
+      dedupBatch(_, _, table, s"$workDir/sink"))
     readSink(spark, s"$workDir/sink").orderBy("doc_id")
   }
 
@@ -88,52 +74,44 @@ object StreamingParagraphDedup {
     * self-probe-guarded index append → atomic manifest commit. Exposed
     * for the drills in StreamingSpec. */
   def dedupBatch(batch: DataFrame, batchId: Long, table: String,
-      sinkDir: String): Unit = {
-    val spark = batch.sparkSession // session coherence (StreamingCuration)
-    if (BatchManifest.committedIds(sinkDir).contains(batchId)) return
-    // the line key: fixed-width "doc:line" so LEXICOGRAPHIC order on
-    // the scalar key equals numeric (doc_id, para_idx) order — the
-    // index needs a scalar id and the arithmetic doc_id·10⁶ + para_idx
-    // encoding wraps 63-bit longs past doc ids ~9.2e12 (real for
-    // 64-bit hash ids). Non-negative ids and < 10⁷ lines per doc are
-    // the width contract (matching the batch struct-min semantics).
-    val paras = batch.select(col("doc_id"),
-        posexplode(split(col("text"), "\n")).as(Seq("para_idx", "para")))
-      .withColumn("pid",
-        format_string("%019d:%07d", col("doc_id"), col("para_idx")))
-      .withColumn("ph",
-        graft.functions.TextAnalysis.fingerprintMd5(col("para")))
-      .localCheckpoint()
-    val withinFirst = paras.join(
-        paras.groupBy("ph").agg(min(col("pid")).as("__first")), "ph")
-      .where(col("pid") === col("__first"))
-      .drop("__first")
-    val crossSeen = IndexStore.probeExact(spark,
-        withinFirst.select("pid", "para"), "pid", "para", table)
-      .select(col("query_id").as("pid")).distinct()
-    val keptLines = withinFirst
-      .join(crossSeen, Seq("pid"), "left_anti")
-      .localCheckpoint()
-    keptLines.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws("\n", transform(
-          array_sort(collect_list(struct(col("para_idx"), col("para")))),
-          s => s.getField("para"))).as("clean_text"))
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    // line-index append guarded by the bucket-local self-probe: a
-    // crashed replay whose append already ran must not double-add
-    val kfps = keptLines.select(col("pid").as("query_id"),
-      IndexStore.exactFingerprint(col("para")).as("fp"))
-    val alreadyIndexed = spark.table(s"${table}_fps")
-      .select(col("pid").as("__ix_id"), col("fp"))
-      .join(kfps, "fp")
-      .where(col("__ix_id") === col("query_id"))
-      .select(col("query_id").as("pid"))
-    IndexStore.appendExactIndex(
-      keptLines.join(alreadyIndexed, Seq("pid"), "left_anti")
-        .select("pid", "para"),
-      "pid", "para", table)
-    IndexStore.autoCompact(spark, "exact", table)
-    BatchManifest.commit(sinkDir, batchId)
-  }
+      sinkDir: String): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { _ =>
+      val spark = batch.sparkSession
+      // the line key: fixed-width "doc:line" so LEXICOGRAPHIC order on
+      // the scalar key equals numeric (doc_id, para_idx) order — the
+      // index needs a scalar id and the arithmetic doc_id·10⁶ + para_idx
+      // encoding wraps 63-bit longs past doc ids ~9.2e12 (real for
+      // 64-bit hash ids). Non-negative ids and < 10⁷ lines per doc are
+      // the width contract (matching the batch struct-min semantics).
+      val paras = batch.select(col("doc_id"),
+          posexplode(split(col("text"), "\n")).as(Seq("para_idx", "para")))
+        .withColumn("pid",
+          format_string("%019d:%07d", col("doc_id"), col("para_idx")))
+        .withColumn("ph",
+          graft.functions.TextAnalysis.fingerprintMd5(col("para")))
+        .localCheckpoint()
+      val withinFirst = paras.join(
+          paras.groupBy("ph").agg(min(col("pid")).as("__first")), "ph")
+        .where(col("pid") === col("__first"))
+        .drop("__first")
+      val crossSeen = IndexStore.probeExact(spark,
+          withinFirst.select("pid", "para"), "pid", "para", table)
+        .select(col("query_id").as("pid")).distinct()
+      val keptLines = withinFirst
+        .join(crossSeen, Seq("pid"), "left_anti")
+        .localCheckpoint()
+      keptLines.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_kept"),
+          concat_ws("\n", transform(
+            array_sort(collect_list(struct(col("para_idx"), col("para")))),
+            s => s.getField("para"))).as("clean_text"))
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      IndexStore.appendExactIndex(
+        BatchManifest.notYetIndexed(spark, keptLines, "pid",
+          IndexStore.exactFingerprint(col("para")), table)
+          .select("pid", "para"),
+        "pid", "para", table)
+      IndexStore.autoCompact(spark, "exact", table)
+      ""
+    }
 }

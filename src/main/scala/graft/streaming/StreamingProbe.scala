@@ -56,21 +56,15 @@ object StreamingProbe {
     * fold, against a caller-owned checkpoint — restartable: a resumed
     * drain on the same checkpoint folds only files staged since. */
   private[graft] def runStream(spark: SparkSession, srcDir: String,
-      momentsDir: String, ckpt: String): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LinearProbe.moments(batch, "x1", "x2", "y")
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("append").parquet(momentsDir)
-        (): Unit
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      momentsDir: String, ckpt: String): Unit =
+    BatchManifest.drain(spark, srcDir, ckpt)(foldMoments(momentsDir))
+
+  /** One micro-batch's moment row, appended under its batch id. */
+  private def foldMoments(momentsDir: String)(batch: DataFrame,
+      batchId: Long): Unit =
+    LinearProbe.moments(batch, "x1", "x2", "y")
+      .withColumn("batch_id", lit(batchId))
+      .coalesce(1).write.mode("append").parquet(momentsDir)
 
   def run(spark: SparkSession, sfDir: String, workDir: String): DataFrame = {
     val docs = graft.Tables.load(spark, sfDir, "documents")
@@ -80,8 +74,7 @@ object StreamingProbe {
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(momentsDir))
     features(docs).repartition(2).write.mode("overwrite").parquet(srcDir)
-    runStream(spark, srcDir, momentsDir,
-      s"$workDir/ckpt_${System.nanoTime()}")
+    BatchManifest.drainOnce(spark, srcDir, workDir)(foldMoments(momentsDir))
     fitFromSink(spark, momentsDir)
   }
 }

@@ -37,23 +37,12 @@ object StreamingPrototype {
 
     val srcDir = s"$workDir/src_${System.nanoTime()}"
     base.repartition(2).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-
-    val name = s"graft_proto_gate_${System.nanoTime()}"
-    val q = IvfIndex.withClusterSim(stream, cent)
-      .where(col("proto_sim").isNull || col("proto_sim") < lit(cutoff))
-      .select(col("vec_id"), col("cluster_id"),
-        floor(col("proto_sim") * lit(1000000.0)).cast("long")
-          .as("proto_micro"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-    }
-    spark.table(name).orderBy("vec_id")
+    BatchManifest.drainToMemory(spark, srcDir, "append")(stream =>
+      IvfIndex.withClusterSim(stream, cent)
+        .where(col("proto_sim").isNull || col("proto_sim") < lit(cutoff))
+        .select(col("vec_id"), col("cluster_id"),
+          floor(col("proto_sim") * lit(1000000.0)).cast("long")
+            .as("proto_micro")))
+      .orderBy("vec_id")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -24,10 +24,8 @@ import graft.operators.{IndexStore, QualityRules}
   *
   * Per-batch cost is O(batch): the gates are scan-local expressions,
   * the index probe moves only the batch (fp-bucketed index side stays
-  * put), and the sink follows the BatchManifest protocol — per-batch
-  * directories, atomic manifest commits, replay overwrites
-  * byte-identically (the StreamingCuration replay argument verbatim,
-  * including the bucket-local self-probe guarding the index append).
+  * put), and the sink follows the [[BatchManifest]] protocol (the
+  * StreamingCuration replay argument verbatim).
   */
 object StreamingQuarantineCuration {
 
@@ -63,28 +61,15 @@ object StreamingQuarantineCuration {
     val sinkDir = s"$workDir/sink"
     Seq(srcDir, sinkDir, s"$workDir/ckpt").foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    new java.io.File(srcDir).mkdirs()
-
-    val q = spark.readStream.schema(crawl.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(batch, batchId, table, sinkDir)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
     // id-range staging: arrival order = id order (the StreamingCuration
     // keeper-coincidence argument); the plant id bands land in later
     // batches than every original they duplicate
-    val ranges = Seq[Column => Column](
-      id => id < 100000,
-      id => id >= 100000 && id < 200000,
-      id => id >= 200000 && id < 700000,
-      id => id >= 700000)
-    try ranges.foreach { pred =>
-      crawl.where(pred(col("doc_id")))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    val id = col("doc_id")
+    BatchManifest.drainEach(spark, srcDir, s"$workDir/ckpt",
+      Seq(id < 100000, id >= 100000 && id < 200000,
+        id >= 200000 && id < 700000, id >= 700000)
+        .map(p => crawl.where(p)))(
+      curateBatch(_, _, table, sinkDir))
     readSink(spark, sinkDir).orderBy("doc_id")
   }
 
@@ -99,53 +84,46 @@ object StreamingQuarantineCuration {
     * dir → self-probe-guarded index append → atomic manifest commit.
     * Same replay-safety ordering as StreamingCuration.curateBatch. */
   def curateBatch(batch: DataFrame, batchId: Long, table: String,
-      sinkDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (BatchManifest.committedIds(sinkDir).contains(batchId)) return
-    val t = col("text")
-    // pinned: the cut branch, survivor branch, and keeper aggregate all
-    // read it (the fineWebPipeline boundary doctrine); thin — no text
-    val staged = batch.select(col("doc_id"), col("text"),
-        IndexStore.exactFingerprint(t).as("__fp"),
-        when(TextAnalysis.charsetQuarantine(t) === 1, "charset")
-          .otherwise(QualityRules.fineWebStageExpr(t)).as("stage"))
-      .localCheckpoint()
-    val cut = staged.where(col("stage") =!= "survivor")
-      .select(col("doc_id"), col("stage").as("cut_stage"))
-    val surv = staged.where(col("stage") === "survivor")
-    // dedup CHECK against everything accepted before this batch
-    val matches = IndexStore.probeExact(spark,
-      surv.select("doc_id", "text"), "doc_id", "text", table)
-    val idxDup = surv.join(
-        matches.select(col("query_id").as("doc_id")).distinct(), "doc_id")
-      .select(col("doc_id"), lit("dedup").as("cut_stage"))
-    val fresh = surv.join(
-        matches.select(col("query_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // within-batch keeper: groupBy(min) + join (hot-fingerprint safe)
-    val withKeep = fresh.join(
-      fresh.groupBy("__fp").agg(min(col("doc_id")).as("__keep")), "__fp")
-    val verdicts = cut
-      .unionByName(idxDup)
-      .unionByName(withKeep.select(col("doc_id"),
-        when(col("doc_id") === col("__keep"), "kept")
-          .otherwise("dedup").as("cut_stage")))
-    verdicts.write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    // guarded index append of this batch's keepers (exactly-once under
-    // crash replay — the bucket-local self-probe)
-    val keeper = withKeep.where(col("doc_id") === col("__keep"))
-    val kfps = keeper.select(col("doc_id").as("query_id"), col("__fp").as("fp"))
-    val alreadyIndexed = spark.table(s"${table}_fps")
-      .select(col("doc_id").as("__ix_id"), col("fp"))
-      .join(kfps, "fp")
-      .where(col("__ix_id") === col("query_id"))
-      .select(col("query_id").as("doc_id"))
-    IndexStore.appendExactIndex(
-      keeper.join(alreadyIndexed, Seq("doc_id"), "left_anti")
-        .select("doc_id", "text"),
-      "doc_id", "text", table)
-    IndexStore.autoCompact(spark, "exact", table)
-    BatchManifest.commit(sinkDir, batchId)
-  }
+      sinkDir: String): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { _ =>
+      val spark = batch.sparkSession
+      val t = col("text")
+      // pinned: the cut branch, survivor branch, and keeper aggregate all
+      // read it (the fineWebPipeline boundary doctrine); thin — no text
+      val staged = batch.select(col("doc_id"), col("text"),
+          IndexStore.exactFingerprint(t).as("__fp"),
+          when(TextAnalysis.charsetQuarantine(t) === 1, "charset")
+            .otherwise(QualityRules.fineWebStageExpr(t)).as("stage"))
+        .localCheckpoint()
+      val cut = staged.where(col("stage") =!= "survivor")
+        .select(col("doc_id"), col("stage").as("cut_stage"))
+      val surv = staged.where(col("stage") === "survivor")
+      // dedup CHECK against everything accepted before this batch
+      val matches = IndexStore.probeExact(spark,
+        surv.select("doc_id", "text"), "doc_id", "text", table)
+      val idxDup = surv.join(
+          matches.select(col("query_id").as("doc_id")).distinct(), "doc_id")
+        .select(col("doc_id"), lit("dedup").as("cut_stage"))
+      val fresh = surv.join(
+          matches.select(col("query_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      // within-batch keeper: groupBy(min) + join (hot-fingerprint safe)
+      val withKeep = fresh.join(
+        fresh.groupBy("__fp").agg(min(col("doc_id")).as("__keep")), "__fp")
+      val verdicts = cut
+        .unionByName(idxDup)
+        .unionByName(withKeep.select(col("doc_id"),
+          when(col("doc_id") === col("__keep"), "kept")
+            .otherwise("dedup").as("cut_stage")))
+      verdicts.write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      // guarded index append of this batch's keepers
+      val keeper = withKeep.where(col("doc_id") === col("__keep"))
+      IndexStore.appendExactIndex(
+        BatchManifest.notYetIndexed(spark, keeper, "doc_id", col("__fp"), table)
+          .select("doc_id", "text"),
+        "doc_id", "text", table)
+      IndexStore.autoCompact(spark, "exact", table)
+      ""
+    }
 }

@@ -22,14 +22,10 @@ import graft.operators.{IvfIndex, Similarity}
   * equal [[Similarity.semanticDedup]] over the whole corpus EXACTLY —
   * parity spec'd in StreamingSpec.
   *
-  * Commit protocol: the [[StreamingPacking]] manifest discipline — each
-  * batch writes its own `b<id>/` directory under both stores and
-  * commits a one-line manifest by atomic rename; readers union
-  * committed directories only. A replayed COMMITTED batch
-  * short-circuits on its manifest entry; an uncommitted one re-derives
-  * identical decisions against the same committed prefix and
-  * overwrites wholesale — so replay safety costs ZERO history reads
-  * (the old form anti-joined every batch against both full sinks).
+  * Commits follow the [[BatchManifest]] protocol, one commit covering
+  * the batch's `b<id>/` directory in BOTH stores; an uncommitted
+  * replay re-derives identical decisions against the same committed
+  * prefix, so replay safety costs ZERO history reads.
   *
   * Scale shape: assignment is map-only; the seen join is cluster-keyed
   * (never all-pairs). The seen store is written
@@ -50,9 +46,10 @@ object StreamingSemDedup {
     * accepted (vec_id, cluster_id) sink. */
   def run(spark: SparkSession, sfDir: String, workDir: String,
       threshold: Double = 0.999): DataFrame = {
-    Seq("src", "seen", "kept", "ckpt", "_manifest").foreach(d =>
+    Seq("src", "seen", "kept", "ckpt").foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"$workDir/$d")))
+    BatchManifest.forget(workDir)
     val base = graft.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         Similarity.toDoubleArray(col("embedding")).as("vec"))
@@ -63,40 +60,25 @@ object StreamingSemDedup {
       base.where(col("vec_id") < 8)
         .select(col("vec_id").cast("int").as("cluster_id"),
           col("vec").as("centroid")))
-    val srcDir = s"$workDir/src"
-    new java.io.File(srcDir).mkdirs()
     val median = base.stat.approxQuantile("vec_id", Array(0.5), 0.0)
       .head.toLong
-    val q = spark.readStream.schema(corpus.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, centroids, threshold, workDir)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    val ranges = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
-      id => id <= median,
-      id => id > median && id < 100000,
-      id => id >= 100000)
-    try ranges.foreach { pred =>
-      corpus.where(pred(col("vec_id")))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    val id = col("vec_id")
+    BatchManifest.drainEach(spark, s"$workDir/src", s"$workDir/ckpt",
+      Seq(id <= median, id > median && id < 100000, id >= 100000)
+        .map(p => corpus.where(p)))(
+      dedupBatch(_, _, centroids, threshold, workDir))
     readKept(spark, workDir).orderBy("vec_id")
   }
 
   /** The committed accepted sink — (vec_id, cluster_id); uncommitted
     * partial batch directories are invisible. (The manifest lives at
     * the workDir root because one commit covers BOTH stores.) */
-  def readKept(spark: SparkSession, workDir: String): DataFrame = {
-    val dirs = BatchManifest.committedIds(workDir)
-      .map(id => s"$workDir/kept/b$id")
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("vec_id"),
-        col("id").cast("int").as("cluster_id"))
-    else spark.read.parquet(dirs: _*).select("vec_id", "cluster_id")
-  }
+  def readKept(spark: SparkSession, workDir: String): DataFrame =
+    BatchManifest.readDirs(spark,
+        BatchManifest.committedDirs(workDir, s"$workDir/kept"))(
+        spark.range(0).select(col("id").as("vec_id"),
+          col("id").cast("int").as("cluster_id")))
+      .select("vec_id", "cluster_id")
 
   /** One micro-batch: within-batch kernel + cross-batch seen check →
     * per-batch directory writes → atomic manifest commit. A replayed
@@ -105,56 +87,55 @@ object StreamingSemDedup {
     * overwrites wholesale. Exposed for the drills in StreamingSpec. */
   def dedupBatch(batch: DataFrame, batchId: Long,
       centroids: Seq[(Int, Seq[Double])], threshold: Double,
-      workDir: String): Unit = {
-    val spark = batch.sparkSession // session coherence (StreamingCuration)
-    val committed = BatchManifest.committedIds(workDir)
-    if (committed.contains(batchId)) return
-    val assigned = IvfIndex.withClusterId(batch, centroids, "vec")
-      .localCheckpoint()
-    // within-batch: the exact batch kernel over this batch alone
-    val withinKept = Similarity
-      .semanticDedup(batch, centroids, threshold)
-      .select("vec_id")
-    // cross-batch: any seen cluster-mate near-dup kills. The seen scan
-    // unions committed batch dirs only and filters to this batch's
-    // clusters — a bounded isin (≤ quantizer size) that prunes the
-    // partitioned store to the slice the join can touch.
-    val seenDirs = committed.map(id => s"$workDir/seen/b$id")
-    val crossKilled =
-      if (seenDirs.isEmpty) assigned.select("vec_id").where(lit(false))
-      else {
-        val batchClusters = assigned.select("cluster_id").distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by the literal quantizer
-        // one read per committed dir (each root runs its own partition
-        // discovery — a shared multi-root read can't infer cluster_id
-        // under the b<id>/cluster_id=N layout); the isin prunes each
-        // scan to the batch's clusters. Production compacts the seen
-        // store periodically (the IndexStore discipline), bounding the
-        // union width.
-        val seen = seenDirs.map(d => spark.read.parquet(d))
-          .reduce(_ unionByName _)
-          .where(col("cluster_id").isin(batchClusters: _*))
-          .select(col("vec_id").as("__sid"),
-            col("cluster_id").as("__scl"), col("vec").as("__svec"))
-        assigned.join(seen,
-            col("cluster_id") === col("__scl") &&
-              col("vec_id") =!= col("__sid"))
-          .withColumn("__cos", Similarity.cosine(col("vec"), col("__svec")))
-          .where(col("__cos").isNotNull && !isnan(col("__cos")) &&
-            col("__cos") >= threshold)
-          .select("vec_id").distinct()
-      }
-    assigned.select("vec_id", "cluster_id")
-      .join(withinKept, "vec_id")
-      .join(crossKilled, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$workDir/kept/b$batchId")
-    // the seen store is the cross-batch join's right side: partitioned
-    // by cluster so future batches' isin prunes at the scan
-    assigned.select("vec_id", "vec", "cluster_id")
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$workDir/seen/b$batchId")
-    // manifest commit LAST (atomic rename): both directories become
-    // visible together or not at all
-    BatchManifest.commit(workDir, batchId)
-  }
+      workDir: String): Unit =
+    BatchManifest.guarded(workDir, batchId) { committed =>
+      val spark = batch.sparkSession
+      val assigned = IvfIndex.withClusterId(batch, centroids, "vec")
+        .localCheckpoint()
+      // within-batch: the exact batch kernel over this batch alone
+      val withinKept = Similarity
+        .semanticDedup(batch, centroids, threshold)
+        .select("vec_id")
+      // cross-batch: any seen cluster-mate near-dup kills. The seen scan
+      // unions committed batch dirs only and filters to this batch's
+      // clusters — a bounded isin (≤ quantizer size) that prunes the
+      // partitioned store to the slice the join can touch.
+      val seenDirs = committed.map(e => s"$workDir/seen/b${e.id}")
+      val crossKilled =
+        if (seenDirs.isEmpty) assigned.select("vec_id").where(lit(false))
+        else {
+          // bounded by the literal quantizer
+          val batchClusters = assigned.select("cluster_id").distinct()
+            .collect().map(_.getInt(0)).toSeq
+          // one read per committed dir (each root runs its own partition
+          // discovery — a shared multi-root read can't infer cluster_id
+          // under the b<id>/cluster_id=N layout); the isin prunes each
+          // scan to the batch's clusters. Production compacts the seen
+          // store periodically (the IndexStore discipline), bounding the
+          // union width.
+          val seen = seenDirs.map(d => spark.read.parquet(d))
+            .reduce(_ unionByName _)
+            .where(col("cluster_id").isin(batchClusters: _*))
+            .select(col("vec_id").as("__sid"),
+              col("cluster_id").as("__scl"), col("vec").as("__svec"))
+          assigned.join(seen,
+              col("cluster_id") === col("__scl") &&
+                col("vec_id") =!= col("__sid"))
+            .withColumn("__cos", Similarity.cosine(col("vec"), col("__svec")))
+            .where(col("__cos").isNotNull && !isnan(col("__cos")) &&
+              col("__cos") >= threshold)
+            .select("vec_id").distinct()
+        }
+      assigned.select("vec_id", "cluster_id")
+        .join(withinKept, "vec_id")
+        .join(crossKilled, Seq("vec_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$workDir/kept/b$batchId")
+      // the seen store is the cross-batch join's right side: partitioned
+      // by cluster so future batches' isin prunes at the scan
+      assigned.select("vec_id", "vec", "cluster_id")
+        .write.mode("overwrite").partitionBy("cluster_id")
+        .parquet(s"$workDir/seen/b$batchId")
+      // the commit covers both directories: visible together or not at all
+      ""
+    }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,22 +14,13 @@ import graft.operators.Ops
   * scale-safe 3-pass prefix — never a single-task window); across
   * batches, ranks continue where the committed sink left off.
   *
-  * Commit protocol (what makes "every rerun produces the identical
-  * shard for every row" hold even under a crash MID-append): each
-  * micro-batch writes its own `b<batchId>/` parquet directory inside
-  * the sink, and a batch only EXISTS once its one-line manifest entry
-  * (`_manifest/<batchId>`, holding the row count) has been renamed into
-  * place — a single atomic file move, the commit point. A crash after a
-  * partial parquet append leaves an uncommitted directory that the
-  * replay simply overwrites wholesale with the SAME rank offset (the
-  * offset is the sum of COMMITTED counts only), so the md5-order
-  * interleaving inside the batch is reproduced bit-for-bit rather than
-  * appended after the surviving subset. Readers union committed
-  * directories only, so partial output is never visible. The offset
-  * itself comes from the tiny manifest (one line per batch), not from
-  * counting the accumulated sink — a restarted stream resumes the deal
-  * with an O(batches) metadata read instead of an O(sink) scan per
-  * micro-batch.
+  * Commits follow the [[BatchManifest]] protocol, each entry holding
+  * its batch's row count. The rank offset is the sum of COMMITTED
+  * counts only, so a replayed uncommitted batch redeals the SAME offset
+  * and reproduces the md5-order interleaving bit-for-bit (what makes
+  * "every rerun produces the identical shard for every row" hold even
+  * under a crash mid-append), and a restarted stream resumes the deal
+  * with an O(batches) manifest read instead of an O(sink) scan.
   *
   * Shard boundaries deliberately SPAN micro-batches: a 128-doc shard
   * may take its last rows from the next arrival, so shard sizes are
@@ -53,48 +42,18 @@ object StreamingShards {
     Seq(srcDir, sinkDir, s"$workDir/ckpt").foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new File(d)))
     val docs = graft.Tables.load(spark, sfDir, "documents").select("doc_id")
-    new File(srcDir).mkdirs()
-
-    val q = spark.readStream.schema(docs.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendSharded(spark, batch, batchId, sinkDir, shardSize)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    try (0 until nBatches).foreach { k =>
-      docs.where(col("doc_id") % nBatches === k)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    BatchManifest.drainEach(spark, srcDir, s"$workDir/ckpt",
+      (0 until nBatches).map(k => docs.where(col("doc_id") % nBatches === k)))(
+      appendSharded(spark, _, _, sinkDir, shardSize))
     readSink(spark, sinkDir).orderBy("doc_id")
-  }
-
-  /** Committed batches as (batchId, rowCount), batchId-ascending —
-    * commit order, since micro-batches run serially with increasing
-    * ids. One tiny file per batch; O(batches), never O(rows). */
-  private def committedBatches(sinkDir: String): Seq[(Long, Long)] = {
-    val dir = new File(s"$sinkDir/_manifest")
-    if (!dir.exists) Seq.empty
-    else dir.listFiles().toSeq
-      .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      .map(f => (f.getName.toLong,
-        Files.readString(f.toPath).trim.toLong))
-      .sortBy(_._1)
   }
 
   /** The committed sink: the union of committed batch directories —
     * uncommitted (crashed-partial) output is invisible by
     * construction. Empty-schema frame when nothing has committed. */
-  def readSink(spark: SparkSession, sinkDir: String): DataFrame = {
-    val dirs = committedBatches(sinkDir).map { case (id, _) =>
-      s"$sinkDir/b$id"
-    }
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("shard_id"))
-    else spark.read.parquet(dirs: _*)
-  }
+  def readSink(spark: SparkSession, sinkDir: String): DataFrame =
+    BatchManifest.readCommitted(spark, sinkDir)(
+      spark.range(0).select(col("id").as("doc_id"), col("id").as("shard_id")))
 
   /** One micro-batch of the deal: continue the global rank from the
     * manifest's committed total, cut shards, write the batch directory,
@@ -104,38 +63,32 @@ object StreamingShards {
     * md5 order) — all-or-nothing, so partial parquet appends can never
     * skew the deal. Exposed for specs. */
   def appendSharded(spark: SparkSession, batch: DataFrame, batchId: Long,
-      sinkDir: String, shardSize: Int): Unit = {
-    val committed = committedBatches(sinkDir)
-    if (committed.exists(_._1 == batchId)) return // replay of a committed batch
-    val offset = committed.map(_._2).sum
-    // Cross-batch duplicate arrivals (a doc re-delivered in a LATER
-    // batch) are dropped against the committed sink's pruned doc_id
-    // column. A deployment whose source re-delivers at scale would
-    // gate on the persisted exact-fingerprint index instead
-    // (IndexStore.dedupIngestGate) — this anti-join is the
-    // doc_id-keyed form of the same check.
-    val existing = readSink(spark, sinkDir)
-    val fresh = (if (committed.isEmpty) batch
-      else batch.join(existing.select("doc_id"), Seq("doc_id"), "left_anti"))
-      .localCheckpoint() // pin: rank + the manifest count must agree
-    val n = fresh.count()
-    Ops.withGlobalRowNumber(
-        fresh.withColumn("__shx",
-          md5(col("doc_id").cast("string").cast("binary"))),
-        Seq(col("__shx"), col("doc_id")),
-        expr("conv(substr(__shx, 1, 13), 16, 10)").cast("double"), "__shrn",
-        leadingBounds = Some(Ops.md5PrefixBounds()))
-      .withColumn("shard_id",
-        floor((col("__shrn") - lit(1) + lit(offset)) / lit(shardSize.toDouble))
-          .cast("long"))
-      .drop("__shx", "__shrn")
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    // commit point: manifest entry appears atomically or not at all
-    new File(s"$sinkDir/_manifest").mkdirs()
-    val tmp = Paths.get(s"$sinkDir/_manifest/.tmp-$batchId")
-    Files.write(tmp, n.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(s"$sinkDir/_manifest/$batchId"),
-      StandardCopyOption.ATOMIC_MOVE)
-    (): Unit
-  }
+      sinkDir: String, shardSize: Int): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { committed =>
+      // the deal continues from the committed row total
+      val offset = committed.map(_.content.trim.toLong).sum
+      // Cross-batch duplicate arrivals (a doc re-delivered in a LATER
+      // batch) are dropped against the committed sink's pruned doc_id
+      // column. A deployment whose source re-delivers at scale would
+      // gate on the persisted exact-fingerprint index instead
+      // (IndexStore.dedupIngestGate) — this anti-join is the
+      // doc_id-keyed form of the same check.
+      val existing = readSink(spark, sinkDir)
+      val fresh = (if (committed.isEmpty) batch
+        else batch.join(existing.select("doc_id"), Seq("doc_id"), "left_anti"))
+        .localCheckpoint() // pin: rank + the manifest count must agree
+      val n = fresh.count()
+      Ops.withGlobalRowNumber(
+          fresh.withColumn("__shx",
+            md5(col("doc_id").cast("string").cast("binary"))),
+          Seq(col("__shx"), col("doc_id")),
+          expr("conv(substr(__shx, 1, 13), 16, 10)").cast("double"), "__shrn",
+          leadingBounds = Some(Ops.md5PrefixBounds()))
+        .withColumn("shard_id",
+          floor((col("__shrn") - lit(1) + lit(offset)) /
+            lit(shardSize.toDouble)).cast("long"))
+        .drop("__shx", "__shrn")
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      n.toString
+    }
 }

@@ -6,28 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.operators.Incremental
 
 /** The reference's cron-driven micro-batch sync (SURVEY §2.10) expressed
-  * as Structured Streaming: readStream → event-time watermark → windowed
-  * aggregation, and readStream → foreachBatch merge for the upsert path.
+  * as Structured Streaming: a file stream → event-time watermark →
+  * windowed aggregation, and a file stream → foreachBatch merge for the
+  * upsert path.
   * The batch-incremental and streaming formulations share the same merge
   * (Incremental.merge) — exactly the foreachBatch pattern a production
   * deployment of the reference would use.
   */
 object StreamingSync {
-
-  /** Streaming scan of the events table. The streaming file source needs
-    * a directory, so the single-file test table is staged once into
-    * `stageDir` (which also normalizes the TIMESTAMP(NANOS) column to
-    * micros — see Tables); a production deployment would stream the
-    * landing directory directly. */
-  def eventsStream(spark: SparkSession, sfDir: String, stageDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    graft.Tables.load(spark, sfDir, "events")
-      .write.mode("overwrite").parquet(stageDir)
-    val schema = spark.read.parquet(stageDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(stageDir)
-  }
 
   /** Hourly tumbling-window aggregation with a 1-hour event-time
     * watermark (bounds state at scale; in complete-mode demos the
@@ -43,23 +29,21 @@ object StreamingSync {
 
   /** Run the windowed aggregation over the events table as a stream into
     * an in-memory sink, synchronously, and return the final result.
-    * The staging dir is unique per run (a FIXED path shared by
-    * concurrent runs over the same dataset would let one run's
-    * overwrite delete files the other's stream is still reading) and
-    * deleted once the stream has drained into the memory sink. */
+    * The streaming file source needs a directory, so the single-file
+    * test table is staged first (which also normalizes the
+    * TIMESTAMP(NANOS) column to micros — see Tables); a production
+    * deployment would stream the landing directory directly. The
+    * staging dir is unique per run (a FIXED path shared by concurrent
+    * runs over the same dataset would let one run's overwrite delete
+    * files the other's stream is still reading) and deleted once the
+    * stream has drained into the memory sink. */
   def runWindowedToMemory(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_stream_${System.nanoTime()}"
     val stage = "/tmp/graft_stream_stage/" +
       sfDir.replaceAll("[^a-zA-Z0-9]", "_") + s"_${System.nanoTime()}"
-    val q = windowedCounts(eventsStream(spark, sfDir, stage))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
-    }
-    spark.table(name).orderBy("w_start", "event_type")
+    graft.Tables.load(spark, sfDir, "events")
+      .write.mode("overwrite").parquet(stage)
+    BatchManifest.drainToMemory(spark, stage, "complete")(windowedCounts)
+      .orderBy("w_start", "event_type")
   }
 
   /** Streaming upsert: micro-batches merged into a parquet target by pk
@@ -86,27 +70,17 @@ object StreamingSync {
       .select("event_id", "user_id", "event_type", "value", "ts")
     events.repartition(2).write.mode("overwrite").parquet(srcDir)
 
-    val stream = {
-      val rawSchema = spark.read.parquet(srcDir).schema
-      spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    }
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // resolve the committed version (not "the last directory"): an
-        // earlier crashed attempt may have staged-but-not-committed
-        val committed = VersionedTable.currentVersion(tgtBase)
-        val merged = committed match {
-          case None => batch
-          case Some(v) => Incremental.merge(
-            VersionedTable.read(spark, tgtBase, v), batch, "event_id")
-        }
-        VersionedTable.write(merged, tgtBase, committed.getOrElse(0) + 1)
-        (): Unit
+    BatchManifest.drainOnce(spark, srcDir, workDir) { (batch, _) =>
+      // resolve the committed version (not "the last directory"): an
+      // earlier crashed attempt may have staged-but-not-committed
+      val committed = VersionedTable.currentVersion(tgtBase)
+      val merged = committed match {
+        case None => batch
+        case Some(v) => Incremental.merge(
+          VersionedTable.read(spark, tgtBase, v), batch, "event_id")
       }
-      .option("checkpointLocation", s"$workDir/ckpt_${System.nanoTime()}")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      VersionedTable.write(merged, tgtBase, committed.getOrElse(0) + 1)
+    }
     require(VersionedTable.currentVersion(tgtBase).nonEmpty,
       "stream produced no batches")
     // retention: drop superseded versions, keeping one predecessor for

@@ -1,9 +1,5 @@
 package graft.streaming
 
-import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,33 +12,19 @@ import graft.operators.QualityRules
   * watches to catch a crawl-mix shift (a batch whose `lang_en` share
   * collapses, a boilerplate source flooding `gopher_pass = 0`) BEFORE
   * the composed pipeline's kept-rate moves. Counts per batch are a pure
-  * function of the batch's rows (replay re-derives identical content);
-  * commit is the [[StreamingShards]] manifest discipline — each batch's
-  * directory becomes visible only when its one-line manifest entry
-  * renames into place, so a crash mid-write never exposes a partial
-  * batch to readers.
+  * function of the batch's rows, so a replay re-derives identical
+  * content; commits follow the [[BatchManifest]] protocol.
   */
 object StreamingVenn {
 
-  private def committedIds(sinkDir: String): Seq[Long] = {
-    val dir = new File(s"$sinkDir/_manifest")
-    if (!dir.exists) Seq.empty
-    else dir.listFiles().toSeq
-      .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      .map(_.getName.toLong).sorted
-  }
-
   /** The committed verdict table (uncommitted partials invisible). */
-  def readSink(spark: SparkSession, sinkDir: String): DataFrame = {
-    val dirs = committedIds(sinkDir).map(id => s"$sinkDir/b$id")
-    if (dirs.isEmpty)
+  def readSink(spark: SparkSession, sinkDir: String): DataFrame =
+    BatchManifest.readCommitted(spark, sinkDir)(
       spark.range(0).select(col("id").cast("int").as("batch_res"),
         col("id").cast("int").as("lang_en"),
         col("id").cast("int").as("c4_ok"),
         col("id").cast("int").as("gopher_pass"),
-        col("id").as("n_docs"))
-    else spark.read.parquet(dirs: _*)
-  }
+        col("id").as("n_docs")))
 
   /** Stages the documents table as 4 residue-class files, drains after
     * each; returns the accumulated per-batch verdict table
@@ -55,20 +37,9 @@ object StreamingVenn {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text")
-    new java.io.File(srcDir).mkdirs()
-
-    val q = spark.readStream.schema(docs.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVenn(batch, batchId, sinkDir, nBatches)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    try (0 until nBatches).foreach { k =>
-      docs.where(col("doc_id") % nBatches === k)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-    } finally q.stop()
+    BatchManifest.drainEach(spark, srcDir, s"$workDir/ckpt",
+      (0 until nBatches).map(k => docs.where(col("doc_id") % nBatches === k)))(
+      appendVenn(_, _, sinkDir, nBatches))
     readSink(spark, sinkDir)
       .orderBy("batch_res", "lang_en", "c4_ok", "gopher_pass")
   }
@@ -79,18 +50,13 @@ object StreamingVenn {
     * counts are a pure function of the rows). Exposed for the replay
     * drill in StreamingSpec. */
   def appendVenn(batch: DataFrame, batchId: Long, sinkDir: String,
-      nBatches: Int): Unit = {
-    if (committedIds(sinkDir).contains(batchId)) return
-    QualityRules.gateFlags(batch)
-      .withColumn("batch_res", (col("doc_id") % nBatches).cast("int"))
-      .groupBy("batch_res", "lang_en", "c4_ok", "gopher_pass")
-      .agg(count(lit(1)).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
-    new File(s"$sinkDir/_manifest").mkdirs()
-    val tmp = Paths.get(s"$sinkDir/_manifest/.tmp-$batchId")
-    Files.write(tmp, "1".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(s"$sinkDir/_manifest/$batchId"),
-      StandardCopyOption.ATOMIC_MOVE)
-    (): Unit
-  }
+      nBatches: Int): Unit =
+    BatchManifest.guarded(sinkDir, batchId) { _ =>
+      QualityRules.gateFlags(batch)
+        .withColumn("batch_res", (col("doc_id") % nBatches).cast("int"))
+        .groupBy("batch_res", "lang_en", "c4_ok", "gopher_pass")
+        .agg(count(lit(1)).as("n_docs"))
+        .write.mode("overwrite").parquet(s"$sinkDir/b$batchId")
+      "1"
+    }
 }
